@@ -1,0 +1,3 @@
+"""Repository benchmark: `python3 perfbench/run.py --workload <name> ...`.
+
+See perfbench/README.md for the workloads, metrics and known gaps."""
