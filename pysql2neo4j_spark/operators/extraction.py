@@ -1,18 +1,24 @@
 """B6/B7 — batched mention detection + (subj, pred, obj) triple
-extraction via ONE vectorized Arrow/pandas UDF [BASELINE.json:6,15].
+extraction via ONE vectorized Arrow crossing [BASELINE.json:6,15].
 
 Design notes (scale):
-  * a single ``pandas_udf`` returns ``struct<mentions: array<struct>,
-    triples: array<struct>>`` so each 10k-row Arrow batch crosses the
-    JVM/Python boundary exactly once;
+  * a single ``mapInPandas`` kernel (``extract_all_flat``) emits mention
+    rows ('m') and triple rows ('t') together under one union schema,
+    so each Arrow batch crosses the JVM/Python boundary exactly once
+    and the corpus is decoded and regex-scanned once;
   * inside the batch everything is vectorized pandas string ops
-    (``str.split`` / ``str.extract`` / groupby-agg) — no per-row Python
-    [BASELINE.json:15];
-  * the UDF is a pure function of ``text`` alone, so extraction is
-    invariant under any partitioning / shuffle (tests/test_invariants.py);
+    (``str.split`` / ``str.extract`` / grouped cumsum) — no per-row or
+    per-group Python [BASELINE.json:15];
+  * the kernel is a pure function of each row's ``text``, so extraction
+    is invariant under any partitioning / shuffle
+    (tests/test_invariants.py);
   * offsets are computed arithmetically from the grammar (subject is
     sentence-initial; object offset = subj_len + len(phrase) + 2), not
     via re-scanning, keeping the batch O(rows x patterns).
+
+``mentions_from_staged`` / ``triples_from_staged`` split the staged
+rows into the mentions and triples IR tables; parquet column pruning
+makes the per-table filters nearly free.
 
 The grammar is ``corpus.PREDICATES`` — the same spec the frozen oracle
 (oracle_extractor.py) implements row-at-a-time; the two share only the
@@ -21,237 +27,20 @@ grammar constants, never code (SURVEY.md §7.1).
 
 from __future__ import annotations
 
+import re as _re
+
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
+from pyspark.sql import types as _T
 
 from ..corpus import MENTION_ONLY_TEMPLATES, PREDICATES
-from ..schemas import MENTION_STRUCT, TRIPLE_STRUCT
-
-_EXTRACT_TYPE = T.StructType(
-    [
-        T.StructField("mentions", T.ArrayType(MENTION_STRUCT), False),
-        T.StructField("triples", T.ArrayType(TRIPLE_STRUCT), False),
-    ]
-)
 
 _SENT_SPLIT = r"(?<=[.?])\s+"
 
 
 def _normalize(s: pd.Series) -> pd.Series:
     return s.str.lower().str.replace(r"\s+", " ", regex=True).str.strip()
-
-
-def _extract_batch(texts: pd.Series) -> pd.DataFrame:
-    """Vectorized extraction over one Arrow batch."""
-    import re
-
-    n = len(texts)
-    if n == 0:
-        return pd.DataFrame({"mentions": [], "triples": []})
-
-    base = pd.DataFrame({"text": texts.fillna("").values, "rid": range(n)})
-    sents = base.assign(sent=base["text"].str.split(_SENT_SPLIT)).explode("sent")
-    sents = sents.dropna(subset=["sent"])
-    # char offset of each sentence inside its turn: sentences are joined by
-    # one whitespace char, so offset = cumsum(len+1) shifted within rid.
-    slen1 = sents["sent"].str.len() + 1
-    # inclusive grouped cumsum minus the element = exclusive prefix sum
-    sents = sents.assign(soff=slen1.groupby(sents["rid"]).cumsum() - slen1)
-
-    m_parts: list[pd.DataFrame] = []
-    t_parts: list[pd.DataFrame] = []
-
-    claimed = pd.Series(False, index=sents.index)  # first-match-wins, as the oracle
-    for pred, (_st, _ot, phrase) in PREDICATES.items():
-        pat = r"^(.+?) " + re.escape(phrase) + r" (.+?)[.?]$"
-        ex = sents["sent"].str.extract(pat)
-        hit = ex[0].notna() & ~claimed
-        if not hit.any():
-            continue
-        claimed |= hit
-        h = sents.loc[hit, ["rid", "soff"]].copy()
-        h["subj"] = ex.loc[hit, 0]
-        h["obj"] = ex.loc[hit, 1]
-        h["pred"] = pred
-        h["subj_start"] = h["soff"].astype("int64")
-        h["obj_start"] = h["subj_start"] + h["subj"].str.len() + len(phrase) + 2
-        t_parts.append(h)
-        for col, start in (("subj", "subj_start"), ("obj", "obj_start")):
-            m_parts.append(
-                pd.DataFrame(
-                    {
-                        "rid": h["rid"],
-                        "surface": h[col],
-                        "start": h[start],
-                    }
-                )
-            )
-
-    for tmpl in MENTION_ONLY_TEMPLATES:
-        pre, suf = tmpl.split("{E}")
-        pat = "^" + re.escape(pre) + r"(.+?)" + re.escape(suf) + "$"
-        ex = sents["sent"].str.extract(pat)
-        hit = ex[0].notna() & ~claimed
-        if not hit.any():
-            continue
-        claimed |= hit
-        h = sents.loc[hit, ["rid", "soff"]]
-        m_parts.append(
-            pd.DataFrame(
-                {
-                    "rid": h["rid"],
-                    "surface": ex.loc[hit, 0],
-                    "start": (h["soff"] + len(pre)).astype("int64"),
-                }
-            )
-        )
-
-    def build_mentions(g: pd.DataFrame) -> list[dict]:
-        surf = g["surface"]
-        norm = _normalize(surf)
-        start = g["start"].astype(int)
-        end = start + surf.str.len().astype(int)
-        return [
-            {"surface": s, "norm": nm, "start": int(st), "end": int(en)}
-            for s, nm, st, en in zip(surf, norm, start, end)
-        ]
-
-    def build_triples(g: pd.DataFrame) -> list[dict]:
-        return [
-            {
-                "subj_surface": r.subj,
-                "pred": r.pred,
-                "obj_surface": r.obj,
-                "subj_start": int(r.subj_start),
-                "obj_start": int(r.obj_start),
-            }
-            for r in g.itertuples(index=False)
-        ]
-
-    if t_parts:
-        allt = pd.concat(t_parts, ignore_index=True).sort_values(["rid", "subj_start"])
-        t_packed = allt.groupby("rid").apply(build_triples, include_groups=False)
-    else:
-        t_packed = pd.Series(dtype=object)
-    t_col = pd.Series([[] for _ in range(n)], index=range(n))
-    t_col.update(t_packed)
-
-    if m_parts:
-        allm = pd.concat(m_parts, ignore_index=True).sort_values(["rid", "start"])
-        m_packed = allm.groupby("rid").apply(build_mentions, include_groups=False)
-    else:
-        m_packed = pd.Series(dtype=object)
-    m_col = pd.Series([[] for _ in range(n)], index=range(n))
-    m_col.update(m_packed)
-
-    return pd.DataFrame({"mentions": m_col.values, "triples": t_col.values})
-
-
-@F.pandas_udf(_EXTRACT_TYPE)
-def extract_udf(texts: pd.Series) -> pd.DataFrame:
-    return _extract_batch(texts)
-
-
-def with_extraction(turns: DataFrame) -> DataFrame:
-    """Attach the ``extracted`` struct column (one Arrow crossing)."""
-    return turns.withColumn("extracted", extract_udf(F.col("text")))
-
-
-def mentions_table(turns_extracted: DataFrame) -> DataFrame:
-    """Explode to the mentions IR table (FIXTURES.md §C).
-
-    mention_id is a deterministic pure function of (conv_id, turn_idx,
-    start) — stable under any partitioning."""
-    m = turns_extracted.select(
-        "conv_id",
-        "turn_idx",
-        "role",
-        F.explode("extracted.mentions").alias("m"),
-    )
-    return m.select(
-        "conv_id",
-        "turn_idx",
-        F.concat_ws(":", "conv_id", "turn_idx", F.col("m.start")).alias("mention_id"),
-        F.col("m.surface").alias("surface"),
-        F.col("m.norm").alias("norm"),
-        F.col("m.start").alias("start"),
-        F.col("m.end").alias("end"),
-        "role",
-    )
-
-
-def triples_table(turns_extracted: DataFrame) -> DataFrame:
-    """Explode to the surface-level triples IR table with qualifiers
-    (tool, ts, extraction provenance) — reference analogue: one FK
-    *instance* per child row [recon: graphproc.py createRelations]."""
-    t = turns_extracted.select(
-        "conv_id",
-        "turn_idx",
-        "tool",
-        "ts",
-        F.explode("extracted.triples").alias("t"),
-    )
-    return t.select(
-        "conv_id",
-        "turn_idx",
-        F.concat_ws(":", "conv_id", "turn_idx", F.col("t.subj_start")).alias("subj_mention"),
-        F.col("t.pred").alias("pred"),
-        F.concat_ws(":", "conv_id", "turn_idx", F.col("t.obj_start")).alias("obj_mention"),
-        F.lower(F.trim(F.regexp_replace(F.col("t.subj_surface"), r"\s+", " "))).alias("subj_norm"),
-        F.lower(F.trim(F.regexp_replace(F.col("t.obj_surface"), r"\s+", " "))).alias("obj_norm"),
-        F.col("ts"),
-        F.create_map(
-            F.lit("tool"), F.coalesce(F.col("tool"), F.lit("")),
-            F.lit("ts"), F.col("ts").cast("string"),
-        ).alias("qualifiers"),
-    )
-
-
-# ---------------------------------------------------------------------
-# Flat extractors (the pipeline hot path).
-#
-# The nested-array UDF above is the right shape when a downstream
-# operator wants per-turn arrays (posexplode keeps turn grouping for
-# free), but packing 15k tiny Python lists per batch via groupby.apply
-# costs ~25x the regex work itself (profiled: 37s of 39s). The flat
-# mapInPandas kernels below emit mention/triple ROWS directly — zero
-# per-group Python — and are what plans/pipeline.py runs.
-# ---------------------------------------------------------------------
-
-import re as _re
-
-from pyspark.sql import types as _T
-
-_FLAT_COMMON = [
-    ("conv_id", _T.StringType()),
-    ("turn_idx", _T.IntegerType()),
-]
-
-MENTIONS_FLAT_SCHEMA = _T.StructType(
-    [_T.StructField(n, t, True) for n, t in _FLAT_COMMON]
-    + [
-        _T.StructField("role", _T.StringType(), True),
-        _T.StructField("surface", _T.StringType(), True),
-        _T.StructField("norm", _T.StringType(), True),
-        _T.StructField("start", _T.IntegerType(), True),
-        _T.StructField("end", _T.IntegerType(), True),
-    ]
-)
-
-TRIPLES_FLAT_SCHEMA = _T.StructType(
-    [_T.StructField(n, t, True) for n, t in _FLAT_COMMON]
-    + [
-        _T.StructField("tool", _T.StringType(), True),
-        _T.StructField("ts", _T.TimestampNTZType(), True),
-        _T.StructField("subj_surface", _T.StringType(), True),
-        _T.StructField("pred", _T.StringType(), True),
-        _T.StructField("obj_surface", _T.StringType(), True),
-        _T.StructField("subj_start", _T.IntegerType(), True),
-        _T.StructField("obj_start", _T.IntegerType(), True),
-    ]
-)
 
 
 def _sentences(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -364,105 +153,6 @@ def _match_mention_only(sents: pd.DataFrame, claimed_rel: pd.Series) -> pd.DataF
     return pd.concat(parts, ignore_index=True)
 
 
-def extract_mentions_flat(turns: DataFrame) -> DataFrame:
-    """B6 flat path: one mapInPandas crossing, mention rows out."""
-    turns = turns.select("conv_id", "turn_idx", "role", "text")  # guide §4.1
-
-    def kernel(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            sents = _sentences(pdf)
-            rel, claimed = _match_relations(sents)
-            mo = _match_mention_only(sents, claimed)
-            frames = []
-            for side, start_col in (("subj_surface", "subj_start"), ("obj_surface", "obj_start")):
-                if len(rel):
-                    frames.append(
-                        rel[["conv_id", "turn_idx", "role"]].assign(
-                            surface=rel[side], start=rel[start_col]
-                        )
-                    )
-            if len(mo):
-                frames.append(
-                    mo[["conv_id", "turn_idx", "role"]].assign(
-                        surface=mo["surface"], start=mo["start"]
-                    )
-                )
-            if not frames:
-                continue
-            out = pd.concat(frames, ignore_index=True)
-            out["norm"] = _normalize(out["surface"])
-            out["start"] = out["start"].astype("int32")
-            out["end"] = (out["start"] + out["surface"].str.len()).astype("int32")
-            yield out[["conv_id", "turn_idx", "role", "surface", "norm", "start", "end"]]
-
-    return turns.mapInPandas(kernel, schema=MENTIONS_FLAT_SCHEMA)
-
-
-def extract_triples_flat(turns: DataFrame) -> DataFrame:
-    """B7 flat path: one mapInPandas crossing, triple rows out."""
-    turns = turns.select("conv_id", "turn_idx", "tool", "ts", "text")  # guide §4.1
-
-    def kernel(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            rel, _claimed = _match_relations(_sentences(pdf))
-            if not len(rel):
-                continue
-            out = rel[
-                ["conv_id", "turn_idx", "tool", "ts", "subj_surface", "pred",
-                 "obj_surface", "subj_start", "obj_start"]
-            ].copy()
-            out["subj_start"] = out["subj_start"].astype("int32")
-            out["obj_start"] = out["obj_start"].astype("int32")
-            yield out
-
-    return turns.mapInPandas(kernel, schema=TRIPLES_FLAT_SCHEMA)
-
-
-def mentions_from_flat(flat: DataFrame) -> DataFrame:
-    """Finalize the mentions IR (ids + column order) from the flat rows."""
-    return flat.select(
-        "conv_id",
-        "turn_idx",
-        F.concat_ws(":", "conv_id", "turn_idx", "start").alias("mention_id"),
-        "surface",
-        "norm",
-        "start",
-        "end",
-        "role",
-    )
-
-
-def triples_from_flat(flat: DataFrame) -> DataFrame:
-    """Finalize the triples IR from the flat rows (norms + qualifiers)."""
-    return flat.select(
-        "conv_id",
-        "turn_idx",
-        F.concat_ws(":", "conv_id", "turn_idx", "subj_start").alias("subj_mention"),
-        "pred",
-        F.concat_ws(":", "conv_id", "turn_idx", "obj_start").alias("obj_mention"),
-        F.lower(F.trim(F.regexp_replace("subj_surface", r"\s+", " "))).alias("subj_norm"),
-        F.lower(F.trim(F.regexp_replace("obj_surface", r"\s+", " "))).alias("obj_norm"),
-        "ts",
-        F.create_map(
-            F.lit("tool"), F.coalesce(F.col("tool"), F.lit("")),
-            F.lit("ts"), F.col("ts").cast("string"),
-        ).alias("qualifiers"),
-    )
-
-
-# ---------------------------------------------------------------------
-# Single-pass staging extractor: mentions AND triples from ONE scan.
-#
-# The two flat kernels above each pay a full decode+regex pass over the
-# corpus; at bench scale that doubles the dominant cost. The staging
-# kernel emits a union schema (row_type 'm'|'t') in one pass; parquet
-# column pruning makes the downstream per-table filters ~free.
-# ---------------------------------------------------------------------
-
 STAGED_SCHEMA = _T.StructType(
     [
         _T.StructField("row_type", _T.StringType(), False),
@@ -488,19 +178,14 @@ _STAGED_COLS = [f.name for f in STAGED_SCHEMA.fields]
 
 def extract_all_flat(turns: DataFrame) -> DataFrame:
     """One mapInPandas crossing emitting mention rows ('m') and triple
-    rows ('t') together (the pipeline hot path — see plans/pipeline.py).
+    rows ('t') together — the extraction kernel of every caller (see
+    plans/pipeline.extract_and_commit).
 
     Projects to exactly the kernel's six input columns before the
     Python crossing (guide §4.1: Spark cannot see which columns an
     opaque mapInPandas touches, so it would ship them all): callers
-    pass frames carrying part_key and the stable-order turn_ord, and
-    pruning those here (a) keeps them out of Arrow and (b) lets
-    Catalyst drop the WindowExec + full-text per-partition sort behind
-    turn_ord from every call site's plan — batch extract_stage, the
-    streaming bridge's per-microbatch extract, and the dry-run plan —
-    since the kernel is a pure function of each row's text and nothing
-    downstream of the staged rows reads turn_ord (r7; plan evidence in
-    plans/r07/kg_build_extract_{before,after}.txt)."""
+    pass frames carrying part_key, and pruning it here keeps it out of
+    Arrow."""
     turns = turns.select("conv_id", "turn_idx", "role", "tool", "ts", "text")
 
     def kernel(batches):
@@ -545,17 +230,37 @@ def extract_all_flat(turns: DataFrame) -> DataFrame:
 
 
 def mentions_from_staged(staged: DataFrame) -> DataFrame:
-    return mentions_from_flat(
-        staged.filter(F.col("row_type") == "m").select(
-            "conv_id", "turn_idx", "role", "surface", "norm", "start", "end"
-        )
+    """The mentions IR (FIXTURES.md §C) from the staged 'm' rows.
+
+    mention_id is a deterministic pure function of (conv_id, turn_idx,
+    start) — stable under any partitioning."""
+    return staged.filter(F.col("row_type") == "m").select(
+        "conv_id",
+        "turn_idx",
+        F.concat_ws(":", "conv_id", "turn_idx", "start").alias("mention_id"),
+        "surface",
+        "norm",
+        "start",
+        "end",
+        "role",
     )
 
 
 def triples_from_staged(staged: DataFrame) -> DataFrame:
-    return triples_from_flat(
-        staged.filter(F.col("row_type") == "t").select(
-            "conv_id", "turn_idx", "tool", "ts", "subj_surface", "pred",
-            "obj_surface", "subj_start", "obj_start"
-        )
+    """The surface-level triples IR from the staged 't' rows, with norms
+    and qualifiers (tool, ts) — reference analogue: one FK *instance*
+    per child row [recon: graphproc.py createRelations]."""
+    return staged.filter(F.col("row_type") == "t").select(
+        "conv_id",
+        "turn_idx",
+        F.concat_ws(":", "conv_id", "turn_idx", "subj_start").alias("subj_mention"),
+        "pred",
+        F.concat_ws(":", "conv_id", "turn_idx", "obj_start").alias("obj_mention"),
+        F.lower(F.trim(F.regexp_replace("subj_surface", r"\s+", " "))).alias("subj_norm"),
+        F.lower(F.trim(F.regexp_replace("obj_surface", r"\s+", " "))).alias("obj_norm"),
+        "ts",
+        F.create_map(
+            F.lit("tool"), F.coalesce(F.col("tool"), F.lit("")),
+            F.lit("ts"), F.col("ts").cast("string"),
+        ).alias("qualifiers"),
     )

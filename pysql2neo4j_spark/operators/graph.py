@@ -32,30 +32,6 @@ def link_mentions(mentions: DataFrame, form2entity: DataFrame, n_salts: int = 16
     )
 
 
-def build_nodes(
-    linked_mentions: DataFrame, cache_registry: list | None = None
-) -> DataFrame:
-    """One node per canonical entity: id, display name (most frequent
-    surface, deterministic tiebreak), alias set, mention count.
-
-    ONE pass over the fact table (the (entity, surface, norm) rollup,
-    map-side combined) and ONE vocabulary-sized aggregate after it —
-    see ``nodes_from_surface_stats``.  The rollup is consumed exactly
-    once, so no persist is needed; ``cache_registry`` is accepted for
-    caller symmetry with ``build_edges`` (nothing is registered).
-
-    This is the SELF-CONTAINED operator form, for callers holding only
-    a linked-mentions frame. The pipeline itself no longer calls it
-    (r6): its fact scan duplicated link_prep's, so materialize_graph
-    builds nodes from link_candidates' checkpointed (norm, surface, n)
-    rollup joined to canonical ids — identical rows, zero extra fact
-    reads (VERDICT r5 #3)."""
-    per_surface = linked_mentions.groupBy("entity_id", "surface", "norm").agg(
-        F.count("*").alias("n")
-    )
-    return nodes_from_surface_stats(per_surface)
-
-
 def nodes_from_surface_stats(per_surface: DataFrame) -> DataFrame:
     """Node rows from a (entity_id, surface, norm, n) rollup — the
     vocabulary-sized frame that is ALSO the incremental-finalize state

@@ -1,5 +1,5 @@
-"""B8-B13 — entity linking: minhash/blocking candidate generation,
-similarity scoring, best-match selection [BASELINE.json:6].
+"""B8-B12 — entity linking: minhash/blocking candidate generation and
+similarity scoring [BASELINE.json:6].
 
 Reference analogue: pysql2neo4j links a child row to its parent by FK
 equality against an indexed PK [recon: graphproc.py]. Transcripts have
@@ -316,13 +316,3 @@ def link_candidates(
     # projection still reads the checkpointed blocks — no rescan
     return forms.drop("sh"), edges, surf
 
-
-def top1_links(scored_pairs: DataFrame, by: str = "norm_a") -> DataFrame:
-    """B13 — best-match-per-mention selection (rank 1 by score desc,
-    deterministic tiebreak on the partner norm)."""
-    other = "norm_b" if by == "norm_a" else "norm_a"
-    w = Window.partitionBy(by).orderBy(F.desc("score"), F.col(other))
-    return (
-        scored_pairs.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") == 1)
-    )

@@ -1,23 +1,14 @@
-"""B2/B3 — stable turn ordering + explicit conv-hash repartitioning.
+"""B2 — stable turn ordering.
 
 Reference analogue: pysql2neo4j pages each table with ``ORDER BY pk LIMIT
 .. OFFSET ..`` [recon: rdbmsproc.py]; the Spark-native equivalent is a
-window over (conv_id, turn_idx) that assigns a stable ordinal, plus an
-explicit hash repartition on conv_id so every downstream per-
-conversation operation is co-located and skew-free [BASELINE.json:6].
+window over (conv_id, turn_idx) that assigns a stable ordinal.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-
-
-def repartition_by_conv(df: DataFrame, n_partitions: int | None = None) -> DataFrame:
-    """Explicit repartition on conv_id hash [BASELINE.json:6]. Hashing
-    via xxhash64 spreads adversarial conv_id distributions uniformly."""
-    n = n_partitions or df.sparkSession.sparkContext.defaultParallelism
-    return df.repartition(n, F.xxhash64("conv_id"))
 
 
 def with_stable_order(df: DataFrame) -> DataFrame:

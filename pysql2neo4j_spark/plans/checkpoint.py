@@ -76,36 +76,31 @@ class CheckpointManager:
         )
         out.write.mode("append").parquet(self.manifest_path)
 
-    def has_legacy_flat(self, spark: SparkSession, stage: str) -> bool:
-        """True iff any manifest row for ``stage`` predates the run-dir
-        protocol (``run_dir`` null): those partitions' staged rows live
-        FLAT under the stage root, not in a run subdirectory. Readers
-        must include the flat files or a resumed pre-upgrade store
-        silently drops every previously committed partition (its keys
-        still count as complete in ``filter_pending``)."""
-        if not self.exists():
-            return False
-        return bool(
-            self.manifest(spark)
-            .filter((F.col("stage") == stage) & F.col("run_dir").isNull())
-            .head(1)
-        )
-
     def committed_run_dirs(self, spark: SparkSession, stage: str) -> list[str]:
         """Distinct staged subdirectories committed for ``stage`` —
         the ONLY directories a reader may open (crash-orphaned data
         stays invisible). Manifest is partition-count-sized: collecting
-        it is bounded."""
+        it is bounded. A commit with no run dir names staged data this
+        reader cannot locate; serving the rest would silently drop those
+        partitions (their keys still count as complete in
+        ``filter_pending``), so it is refused."""
         if not self.exists():
             return []
         rows = (
             self.manifest(spark)
-            .filter((F.col("stage") == stage) & F.col("run_dir").isNotNull())
+            .filter(F.col("stage") == stage)
             .select("run_dir")
             .distinct()
             .collect()
         )
-        return sorted(r.run_dir for r in rows)
+        dirs = [r.run_dir for r in rows]
+        if None in dirs:
+            raise ValueError(
+                f"manifest {self.manifest_path} has commits for stage '{stage}' "
+                "with no run_dir: their staged data is in a layout this reader "
+                "does not support — re-extract into a fresh out_dir"
+            )
+        return sorted(dirs)
 
 
 def _hex_fp_to_long(col):

@@ -27,17 +27,11 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.text import adaptive_containment, char_shingles
-from ..operators.extraction import (
-    extract_all_flat,
-    mentions_from_staged,
-    triples_from_staged,
-)
+from ..operators.extraction import mentions_from_staged, triples_from_staged
 from ..operators.graph import build_edges, link_mentions
 from ..operators.linking import blocking_keys
-from ..operators.ordering import with_stable_order
 from ..schemas import MENTIONS_SCHEMA, TRIPLES_SCHEMA
-from .checkpoint import with_part_key
-from .pipeline import PipelineConfig
+from .pipeline import PipelineConfig, staged_extraction
 
 
 def _fmt(df: DataFrame) -> str:
@@ -54,9 +48,8 @@ def explain_pipeline(
     cfg = cfg or PipelineConfig()
     plans: dict[str, str] = {}
 
-    # --- extraction (the real plan over the real input)
-    t = with_part_key(transcripts, cfg.n_buckets).repartition(cfg.n_buckets, "part_key")
-    staged = with_part_key(extract_all_flat(with_stable_order(t)), cfg.n_buckets)
+    # --- extraction (the plan extract_and_commit writes, over the real input)
+    staged = staged_extraction(transcripts, cfg.n_buckets)
     plans["extract_stage"] = _fmt(staged)
     plans["mentions_ir"] = _fmt(mentions_from_staged(staged))
     plans["triples_ir"] = _fmt(triples_from_staged(staged))

@@ -65,10 +65,16 @@ from pyspark.sql import functions as F
 from ..operators.components import canonical_entities
 from ..operators.graph import PROVENANCE_CAP, build_edges, nodes_from_surface_stats
 from ..operators.linking import delta_candidate_pairs, score_pairs, surface_stats
-from ..schemas import EDGES_SCHEMA, NODES_SCHEMA
+from ..schemas import EDGES_SCHEMA
 from ..sources.transcripts import write_bucketed
 from .checkpoint import CheckpointManager
-from .pipeline import PipelineConfig, materialize_graph, read_committed_ir
+from .pipeline import (
+    PipelineConfig,
+    materialize_graph,
+    read_committed_ir,
+    read_published,
+    run_concurrently,
+)
 
 STATE_DIR = "state"
 
@@ -100,21 +106,6 @@ def _vdir(out_dir: str, version: int, name: str) -> str:
     return os.path.join(out_dir, STATE_DIR, f"v{version:04d}", name)
 
 
-def _publish(spark: SparkSession, out_dir: str, nodes: DataFrame, edges: DataFrame, cfg: PipelineConfig):
-    from pyspark.sql import types as T
-
-    write_bucketed(nodes, os.path.join(out_dir, "nodes"), "entity_id",
-                   n_buckets=cfg.n_entity_buckets, catalog=cfg.catalog)
-    write_bucketed(edges, os.path.join(out_dir, "edges"), "src_entity",
-                   n_buckets=cfg.n_entity_buckets, catalog=cfg.catalog)
-    part_f = T.StructField("part_key", T.IntegerType(), True)
-    nodes_out = spark.read.schema(T.StructType(NODES_SCHEMA.fields + [part_f])).parquet(
-        os.path.join(out_dir, "nodes"))
-    edges_out = spark.read.schema(T.StructType(EDGES_SCHEMA.fields + [part_f])).parquet(
-        os.path.join(out_dir, "edges"))
-    return nodes_out, edges_out
-
-
 def _bucket_of(col: str, n_buckets: int):
     return F.pmod(F.xxhash64(F.col(col)), F.lit(n_buckets)).cast("int")
 
@@ -137,8 +128,6 @@ def _publish_delta(
     dir being overwritten, so there is no read-under-write race."""
     import shutil as _shutil
 
-    from pyspark.sql import types as T
-
     if cfg.catalog == "iceberg":
         # the Iceberg path would be overwrite-by-filter on the edge
         # table (a snapshot commit); this parquet-seam implementation
@@ -149,27 +138,8 @@ def _publish_delta(
             "seam; the iceberg path needs overwritePartitions on the edge "
             "table (no iceberg-spark-runtime jar in this environment)"
         )
-    # nodes (vocabulary-sized, its own directory) publish concurrently
-    # with the edge-bucket rewrite below: both are post-state publishes
-    # of INDEPENDENT tables, so the overlap recovers the thread-pool
-    # win without re-opening the state-before-publish atomicity hole
-    # the r6 self-review closed (the caller joins this future before
-    # the meta flip).
-    from concurrent.futures import ThreadPoolExecutor
 
-    pool = ThreadPoolExecutor(max_workers=1)
-    nodes_fut = pool.submit(
-        write_bucketed, nodes, os.path.join(out_dir, "nodes"), "entity_id",
-        n_buckets=cfg.n_entity_buckets, catalog=cfg.catalog,
-    )
-    # ADVICE r6: the pool must not outlive this function on the edge
-    # rewrite's error paths — a leaked non-daemon nodes-write thread
-    # would race a retrying caller's second nodes write against the
-    # same live dir. The finally waits the in-flight nodes write out
-    # (no cancel: parquet overwrite is not safely interruptible) and
-    # only then lets the edge-side exception propagate; on the success
-    # path nodes_fut.result() still surfaces a nodes-write failure.
-    try:
+    def publish_edges():
         edges_path = os.path.join(out_dir, "edges")
         n = cfg.n_entity_buckets
         affected_pks = sorted(r.part_key for r in affected.collect())  # <= n_buckets
@@ -205,15 +175,18 @@ def _publish_delta(
         for pk in set(affected_pks) - written_pks:
             _shutil.rmtree(os.path.join(edges_path, f"part_key={pk}"), ignore_errors=True)
 
-        nodes_fut.result()
-    finally:
-        pool.shutdown(wait=True)
-    part_f = T.StructField("part_key", T.IntegerType(), True)
-    nodes_out = spark.read.schema(T.StructType(NODES_SCHEMA.fields + [part_f])).parquet(
-        os.path.join(out_dir, "nodes"))
-    edges_out = spark.read.schema(T.StructType(EDGES_SCHEMA.fields + [part_f])).parquet(
-        edges_path)
-    return nodes_out, edges_out
+    # nodes (vocabulary-sized, its own directory) publish concurrently
+    # with the edge-bucket rewrite: both are post-state publishes of
+    # INDEPENDENT tables, so the overlap does not re-open the
+    # state-before-publish atomicity hole (the caller flips meta only
+    # after this returns, and run_concurrently lets no writer outlive
+    # it — parquet overwrite is not safely interruptible).
+    run_concurrently(
+        lambda: write_bucketed(nodes, os.path.join(out_dir, "nodes"), "entity_id",
+                               n_buckets=cfg.n_entity_buckets, catalog=cfg.catalog),
+        publish_edges,
+    )
+    return read_published(spark, out_dir)
 
 
 def _merge_edges(
@@ -351,7 +324,7 @@ def finalize_graph(
                 f"but this call asked for {cfg.context_weight} — rebuild "
                 "with the desired weight (fresh out_dir)"
             )
-        return _read_published(spark, out_dir, cfg, meta, mode="noop")
+        return _read_published(spark, out_dir, meta, mode="noop")
     # context-boosted scoring needs the co-mention neighborhoods of ALL
     # mentions; the delta path deliberately never re-reads prior IR, so
     # blending would silently diverge from the full build — refuse
@@ -382,14 +355,8 @@ def _read_state(spark: SparkSession, out_dir: str, version: int):
     return f2e, surf, edges
 
 
-def _read_published(spark, out_dir, cfg, meta, mode):
-    from pyspark.sql import types as T
-
-    part_f = T.StructField("part_key", T.IntegerType(), True)
-    nodes_out = spark.read.schema(T.StructType(NODES_SCHEMA.fields + [part_f])).parquet(
-        os.path.join(out_dir, "nodes"))
-    edges_out = spark.read.schema(T.StructType(EDGES_SCHEMA.fields + [part_f])).parquet(
-        os.path.join(out_dir, "edges"))
+def _read_published(spark, out_dir, meta, mode):
+    nodes_out, edges_out = read_published(spark, out_dir)
     f2e, _, _ = _read_state(spark, out_dir, meta["version"])
     return {"nodes": nodes_out, "edges": edges_out, "form2entity": f2e,
             "metrics": {"mode": mode, "n_delta_run_dirs": 0, "ir_mention_rows_read": 0,
@@ -409,19 +376,14 @@ def _finalize_full(spark, out_dir, cfg, stage, committed, version):
     # checkpointed state / published parquet — independent, so their
     # per-job fixed costs overlap via driver threads (as in the delta
     # path); the meta flip stays after all of them.
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        futs = [
-            pool.submit(lambda: res["surface_stats"].write.mode("overwrite").parquet(
-                _vdir(out_dir, version, "surface_stats"))),
-            pool.submit(lambda: res["form2entity"].write.mode("overwrite").parquet(
-                _vdir(out_dir, version, "form2entity"))),
-            pool.submit(lambda: res["edges"].drop("part_key").write.mode("overwrite").parquet(
-                _vdir(out_dir, version, "edges"))),
-        ]
-        for f in futs:
-            f.result()
+    run_concurrently(
+        lambda: res["surface_stats"].write.mode("overwrite").parquet(
+            _vdir(out_dir, version, "surface_stats")),
+        lambda: res["form2entity"].write.mode("overwrite").parquet(
+            _vdir(out_dir, version, "form2entity")),
+        lambda: res["edges"].drop("part_key").write.mode("overwrite").parquet(
+            _vdir(out_dir, version, "edges")),
+    )
     _commit_state_meta(out_dir, {"version": version, "stage": stage,
                                  "context_weight": cfg.context_weight,
                                  "finalized_run_dirs": sorted(committed)})
@@ -527,19 +489,14 @@ def _finalize_delta(spark, out_dir, cfg, meta, delta_dirs, version):
     # served against vN-1 state until a retry — a failure-atomicity
     # hole the sequential r5 order never had). The meta flip stays
     # after everything.
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        futs = [
-            pool.submit(lambda: surf_new.write.mode("overwrite").parquet(
-                _vdir(out_dir, version, "surface_stats"))),
-            pool.submit(lambda: f2e_new.write.mode("overwrite").parquet(
-                _vdir(out_dir, version, "form2entity"))),
-            pool.submit(lambda: edges.write.mode("overwrite").parquet(
-                _vdir(out_dir, version, "edges"))),
-        ]
-        for f in futs:
-            f.result()
+    run_concurrently(
+        lambda: surf_new.write.mode("overwrite").parquet(
+            _vdir(out_dir, version, "surface_stats")),
+        lambda: f2e_new.write.mode("overwrite").parquet(
+            _vdir(out_dir, version, "form2entity")),
+        lambda: edges.write.mode("overwrite").parquet(
+            _vdir(out_dir, version, "edges")),
+    )
     timings["state_writes"] = round(_time.time() - _t0, 3)
     _t0 = _time.time()
     nodes_out, edges_out = _publish_delta(

@@ -2,10 +2,9 @@
 (SURVEY.md §3.2), resumable from per-partition checkpoints.
 
     transcripts
-      -> repartition(xxhash64(conv_id))          [B3]
-      -> stable order window                     [B2]
-      -> extraction UDF (one Arrow crossing)     [B6/B7]
-      -> mentions / triples tables (checkpointed per part_key) [B18/B19]
+      -> part_key = pmod(xxhash64(conv_id))      [B18]
+      -> extraction kernel (one Arrow crossing)  [B6/B7]
+      -> staged mentions / triples IR (manifest-committed run dirs) [B18/B19]
       -> distinct forms -> blocking -> scoring   [B8-B12]
       -> hash-min connected components           [B14]
       -> canonical ids                           [B15]
@@ -16,6 +15,8 @@ Only the extraction stage is checkpoint-keyed (it is the expensive,
 embarrassingly-partitionable stage — the analogue of the reference's
 per-table CSV export + periodic-commit import); the graph-global stages
 (linking, CC, materialization) recompute from the checkpointed IR.
+Batch extraction (``extract_stage``), ``--stage append`` and the
+streaming sink all commit through ``extract_and_commit``.
 """
 
 from __future__ import annotations
@@ -44,9 +45,13 @@ from ..operators.linking import (
     DEFAULT_THRESHOLD,
     link_candidates,
 )
-from ..operators.ordering import with_stable_order
 from ..sources.transcripts import write_bucketed
-from .checkpoint import CheckpointManager, partition_metrics, with_part_key
+from .checkpoint import (
+    CheckpointManager,
+    input_partition_fingerprints,
+    partition_metrics,
+    with_part_key,
+)
 
 STAGE_EXTRACT = "extract"
 
@@ -71,6 +76,80 @@ class PipelineConfig:
     cc_partitions: int = 4
 
 
+def run_concurrently(*fns) -> list:
+    """Run every callable on its own driver thread (guide §2.6: the
+    per-job fixed costs of independent Spark actions overlap) and
+    return their results in argument order. Waits for ALL of them
+    before returning or raising, so no thread outlives the call — a
+    leaked writer would race a retrying caller over the same output
+    dir — then re-raises the first failure in argument order. Callers
+    keep their ordering constraints by what they pass in one call."""
+    from concurrent.futures import ThreadPoolExecutor, wait
+
+    with ThreadPoolExecutor(max_workers=max(len(fns), 1)) as pool:
+        futs = [pool.submit(fn) for fn in fns]
+        wait(futs)
+    return [f.result() for f in futs]
+
+
+def staged_extraction(turns: DataFrame, n_buckets: int) -> DataFrame:
+    """The staged-IR plan: kernel rows keyed by part_key.
+
+    No shuffle precedes the kernel: it is a pure function of each row's
+    text, and resume correctness lives in the manifest, not in
+    co-location. Only a scan too coarse to occupy the session's cores
+    is spread (``operators.dedup._spread``); a parallel scan passes
+    through with zero Exchanges."""
+    from ..operators.dedup import _spread
+
+    return with_part_key(extract_all_flat(_spread(turns)), n_buckets)
+
+
+def extract_and_commit(
+    spark: SparkSession,
+    turns: DataFrame,
+    out_dir: str,
+    cfg: PipelineConfig,
+    stage: str,
+    run_dir: str,
+    mode: str,
+) -> None:
+    """Extract ``turns`` into ``<out_dir>/extracted/<run_dir>`` and
+    commit that run dir for ``stage`` in the manifest — the one
+    extract path of the batch pipeline, ``--stage append`` and the
+    streaming sink.
+
+    Atomicity (ADVICE r1): the staged rows land in their own run dir
+    and become visible only through the manifest row, so a crash
+    between the write and the commit leaves invisible orphan data and
+    the retry re-extracts those partitions with no duplicates. ``mode``
+    is the staged write's save mode: ``errorifexists`` for a fresh
+    uuid dir, ``overwrite`` for a deterministic name a retry reuses.
+
+    The input-side lineage scan (3 pruned columns, JVM-only) has no
+    dependency on the staged write, so the two run concurrently; the
+    manifest commit happens strictly after both."""
+    t = with_part_key(turns, cfg.n_buckets)
+    path = os.path.join(out_dir, "extracted", run_dir)
+    # FLAT files, part_key as a column: a dynamic-partition
+    # (partitionBy) write above a Python-kernel plan measured 10x the
+    # flat write (50.7s vs 5.1s for the same rows — the planned-write
+    # sort re-materializes the kernel output); the real
+    # partition-pruned layout is the Iceberg path of the writer seam.
+    _, rows = run_concurrently(
+        lambda: staged_extraction(t, cfg.n_buckets).write.mode(mode).parquet(path),
+        lambda: input_partition_fingerprints(
+            t.select("part_key", "conv_id", "turn_idx", "text")
+        ).localCheckpoint(eager=True),
+    )
+    staged_new = spark.read.schema(_staged_with_key()).parquet(path)
+    CheckpointManager(out_dir).record(
+        partition_metrics(t, staged_new.filter(F.col("row_type") == "t"), rows=rows),
+        stage,
+        run_dir=run_dir,
+    )
+
+
 def extract_stage(
     spark: SparkSession,
     transcripts: DataFrame,
@@ -80,90 +159,21 @@ def extract_stage(
 ) -> tuple[DataFrame, DataFrame]:
     """Checkpointed extraction: returns (mentions, triples) read back
     from the stage store (so downstream sees ALL partitions, including
-    ones committed by a previous, partially-failed run).
-
-    Atomicity (ADVICE r1): each run writes its staged rows into a fresh
-    ``run-<uuid>`` subdirectory and only then commits that subdirectory
-    name into the manifest. Readers open ONLY manifest-referenced run
-    dirs, so a crash in the window between the staged write and the
-    manifest commit leaves invisible orphan data — the retry re-extracts
-    those partitions into a new run dir with no duplicates."""
+    ones committed by a previous, partially-failed run). Each run
+    commits a fresh ``run-<uuid>`` dir (``extract_and_commit``)."""
     ckpt = CheckpointManager(out_dir)
-    staged_root = os.path.join(out_dir, "extracted")
     t = with_part_key(transcripts, cfg.n_buckets)
     if resume and ckpt.exists():
         t = ckpt.filter_pending(spark, t, STAGE_EXTRACT)
         # column-pruned probe: short-circuits on the first pending row;
-        # only a fully-resumed run pays a pruned scan here (the old
-        # persist+count paid a full cached pass on EVERY run).
+        # only a fully-resumed run pays a pruned scan here
         has_pending = not t.select("part_key").isEmpty()
     else:
         has_pending = True  # fresh run: no manifest, no probe job
 
     if has_pending:
-        # repartition on conv_id, NOT part_key: the stable-order window
-        # requires hashpartitioning(conv_id), which this satisfies — a
-        # part_key repartition measured as TWO back-to-back full-text
-        # Exchanges (ours + the one Catalyst inserts for the window).
-        # part_key co-location is not needed by the FLAT staged write;
-        # resume correctness lives in the manifest.
-        ordered = with_stable_order(t.repartition(cfg.n_buckets, "conv_id"))
-        # ONE extraction pass: mentions + triples staged together
-        # (union schema, row_type discriminator); part_key is a pure
-        # function of conv_id — recomputed, never joined back.
-        # extract_all_flat projects to the kernel's input columns
-        # internally (r7), which prunes part_key/turn_ord out of the
-        # Arrow crossing AND lets Catalyst delete the stable-order
-        # WindowExec + its full-text per-partition sort from this plan
-        # (one Sort + window over 10^12 turns at scale; plan evidence
-        # in plans/r07/). with_stable_order stays in the plan
-        # deliberately — B2 remains the declared ordering step and its
-        # own consumers/tests exercise turn_ord — the pruning is
-        # Catalyst's, proven by the committed explain dumps.
-        staged = with_part_key(extract_all_flat(ordered), cfg.n_buckets)
-        # FLAT files, part_key as a column: a dynamic-partition
-        # (partitionBy) write above a Python-kernel plan measured
-        # 10x the flat write (50.7s vs 5.1s for the same rows — the
-        # planned-write sort re-materializes the kernel output);
-        # resume correctness comes from the manifest, not the
-        # directory layout, and the real partition-pruned layout is
-        # the Iceberg path of the writer seam.
-        run_dir = f"run-{uuid.uuid4().hex[:12]}"
-        # the input-side lineage scan (3 pruned columns, JVM-only) has
-        # no dependency on the staged write, so it runs from a driver
-        # thread UNDER the kernel pass (guide §2.6) instead of as a
-        # second sequential input pass after it; the manifest commit
-        # still happens strictly after both (a failure on either side
-        # leaves the run dir uncommitted-invisible, exactly as before).
-        from concurrent.futures import ThreadPoolExecutor
-
-        from .checkpoint import input_partition_fingerprints
-
-        pool = ThreadPoolExecutor(max_workers=1)
-        rows_fut = pool.submit(
-            lambda: input_partition_fingerprints(
-                t.select("part_key", "conv_id", "turn_idx", "text")
-            ).localCheckpoint(eager=True)
-        )
-        try:
-            staged.write.mode("errorifexists").parquet(os.path.join(staged_root, run_dir))
-            staged_new = spark.read.schema(_staged_with_key()).parquet(
-                os.path.join(staged_root, run_dir)
-            )
-            ckpt.record(
-                partition_metrics(
-                    t,
-                    staged_new.filter(F.col("row_type") == "t"),
-                    rows=rows_fut.result(),
-                ),
-                STAGE_EXTRACT,
-                run_dir=run_dir,
-            )
-        finally:
-            # no thread may outlive this function on the write's error
-            # paths (the _publish_delta precedent)
-            pool.shutdown(wait=True)
-
+        extract_and_commit(spark, t, out_dir, cfg, STAGE_EXTRACT,
+                           run_dir=f"run-{uuid.uuid4().hex[:12]}", mode="errorifexists")
     return read_committed_ir(spark, out_dir, cfg)
 
 
@@ -179,20 +189,6 @@ def read_committed_ir(
     ckpt = CheckpointManager(out_dir)
     staged_root = os.path.join(out_dir, "extracted")
     paths = [os.path.join(staged_root, d) for d in ckpt.committed_run_dirs(spark, stage)]
-    if ckpt.has_legacy_flat(spark, stage):
-        # backward compat (ADVICE r2): manifests committed before the
-        # run-dir protocol reference no subdirectory — their staged
-        # rows are the flat part files directly under the stage root.
-        import glob
-
-        legacy = sorted(glob.glob(os.path.join(staged_root, "part-*.parquet")))
-        if not legacy:
-            raise ValueError(
-                f"manifest for stage '{stage}' references legacy flat staged "
-                f"data but {staged_root} holds no flat part files — refusing "
-                "to resume from an incomplete stage store"
-            )
-        paths.extend(legacy)
     if not paths:  # nothing extracted yet (empty input)
         staged_all = spark.createDataFrame([], schema=_staged_with_key())
     else:
@@ -207,6 +203,20 @@ def _staged_with_key() -> T.StructType:
     return T.StructType(
         STAGED_SCHEMA.fields + [T.StructField("part_key", T.IntegerType(), True)]
     )
+
+
+def read_published(spark: SparkSession, out_dir: str) -> tuple[DataFrame, DataFrame]:
+    """(nodes, edges) of the published graph under ``out_dir``, read
+    with explicit schemas (an empty write leaves no footer to infer
+    from; the pipeline never relies on inference anyway)."""
+    from ..schemas import EDGES_SCHEMA, NODES_SCHEMA
+
+    part_f = T.StructField("part_key", T.IntegerType(), True)
+    nodes = spark.read.schema(T.StructType(NODES_SCHEMA.fields + [part_f])).parquet(
+        os.path.join(out_dir, "nodes"))
+    edges = spark.read.schema(T.StructType(EDGES_SCHEMA.fields + [part_f])).parquet(
+        os.path.join(out_dir, "edges"))
+    return nodes, edges
 
 
 def precision_recall(
@@ -256,11 +266,7 @@ def materialize_graph(
     linked = link_mentions(mentions, form2entity, n_salts=cfg.n_salts)
     # nodes derive from link_prep's checkpointed vocabulary rollup —
     # the same nodes_from_surface_stats shape the incremental path uses
-    # (plans/incremental.py step 4). Before r6 this was
-    # build_nodes(linked): a SECOND full mentions scan + fact-sized
-    # (entity, surface, norm) shuffle, profiled at 16M turns as ~9 s of
-    # the 4-core write_nodes stage (the weakest-scaling stage, VERDICT
-    # r5 #3) for an identical vocabulary-sized result.
+    # (plans/incremental.py step 4): no second mentions scan.
     per_surface = surf.join(F.broadcast(form2entity), on="norm").select(
         "entity_id", "surface", "norm", "n"
     )
@@ -287,13 +293,9 @@ def materialize_graph(
     # nodes and edges are INDEPENDENT tables into a fresh out_dir (no
     # publish-ordering constraint — that exists only in the delta
     # finalize, where state must land before the live dirs mutate), so
-    # the two writes run from concurrent driver threads (guide §2.6):
-    # the vocabulary-sized nodes job back-fills executors idled by the
-    # edge job's tail instead of serializing ~0.6 s of pure fixed cost
-    # after it. Job descriptions/timings stay distinguishable: the
-    # threaded timer records each write's own wall span.
-    from concurrent.futures import ThreadPoolExecutor
-
+    # the two writes run concurrently: the vocabulary-sized nodes job
+    # back-fills executors idled by the edge job's tail. The threaded
+    # timer records each write's own wall span.
     def _timed_write(df, sub, key):
         t0 = time.time()
         write_bucketed(df, os.path.join(out_dir, sub), key,
@@ -301,27 +303,16 @@ def materialize_graph(
         return round(time.time() - t0, 3)
 
     t0 = time.time()
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        nodes_fut = pool.submit(_timed_write, nodes, "nodes", "entity_id")
-        edges_fut = pool.submit(_timed_write, edges, "edges", "src_entity")
-        timings["write_nodes"] = nodes_fut.result()
-        timings["write_edges"] = edges_fut.result()
+    timings["write_nodes"], timings["write_edges"] = run_concurrently(
+        lambda: _timed_write(nodes, "nodes", "entity_id"),
+        lambda: _timed_write(edges, "edges", "src_entity"),
+    )
     timings["write_wall"] = round(time.time() - t0, 3)
     for c in caches:
         c.unpersist(blocking=False)
 
-    # read back with explicit schemas (an empty write leaves no footer
-    # to infer from; the pipeline never relies on inference anyway)
     t0 = time.time()
-    from ..schemas import EDGES_SCHEMA, NODES_SCHEMA
-
-    part_f = T.StructField("part_key", T.IntegerType(), True)
-    nodes_out = spark.read.schema(T.StructType(NODES_SCHEMA.fields + [part_f])).parquet(
-        os.path.join(out_dir, "nodes")
-    )
-    edges_out = spark.read.schema(T.StructType(EDGES_SCHEMA.fields + [part_f])).parquet(
-        os.path.join(out_dir, "edges")
-    )
+    nodes_out, edges_out = read_published(spark, out_dir)
     timings["readback_defs"] = round(time.time() - t0, 3)
     return {
         "mentions": mentions,

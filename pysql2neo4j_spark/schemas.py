@@ -26,15 +26,6 @@ TRANSCRIPT_SCHEMA = T.StructType(
 )
 
 # ------------------------------------------------------------- derived
-MENTION_STRUCT = T.StructType(
-    [
-        T.StructField("surface", T.StringType(), False),
-        T.StructField("norm", T.StringType(), False),
-        T.StructField("start", T.IntegerType(), False),
-        T.StructField("end", T.IntegerType(), False),
-    ]
-)
-
 MENTIONS_SCHEMA = T.StructType(
     [
         T.StructField("conv_id", T.StringType(), False),
@@ -45,16 +36,6 @@ MENTIONS_SCHEMA = T.StructType(
         T.StructField("start", T.IntegerType(), False),
         T.StructField("end", T.IntegerType(), False),
         T.StructField("role", T.StringType(), False),
-    ]
-)
-
-TRIPLE_STRUCT = T.StructType(
-    [
-        T.StructField("subj_surface", T.StringType(), False),
-        T.StructField("pred", T.StringType(), False),
-        T.StructField("obj_surface", T.StringType(), False),
-        T.StructField("subj_start", T.IntegerType(), False),
-        T.StructField("obj_start", T.IntegerType(), False),
     ]
 )
 

@@ -1,13 +1,12 @@
 """Streaming -> KG bridge (VERDICT r1 #8): feed watermark-deduped
-transcript turns through the SAME extraction kernel and checkpoint
-manifest the batch pipeline uses, incrementally, then finalize the
-graph from the accumulated staged IR.
+transcript turns through the SAME extract path and checkpoint manifest
+the batch pipeline uses (``plans.pipeline.extract_and_commit``),
+incrementally, then finalize the graph from the accumulated staged IR.
 
 Design: ``foreachBatch`` is the standard exactly-once micro-batch sink
-shape — each micro-batch runs ``extract_all_flat`` (one Arrow crossing)
-and commits a staged run directory named by its DETERMINISTIC batch id
-(``stream-b<batch_id>``). Idempotence under foreachBatch's
-at-least-once replay contract:
+shape — each micro-batch is extracted and committed as a staged run
+directory whose name is DETERMINISTIC per (checkpoint lineage, batch
+id). Idempotence under foreachBatch's at-least-once replay contract:
   * a replayed batch whose run dir is already in the manifest is
     skipped (the commit is the manifest row, exactly as the batch
     pipeline's run-dir protocol — plans/checkpoint.py);
@@ -28,13 +27,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.extraction import extract_all_flat
-from ..operators.ordering import with_stable_order
-from ..plans.checkpoint import CheckpointManager, partition_metrics, with_part_key
-from ..plans.pipeline import (
-    PipelineConfig,
-    _staged_with_key,
-)
+from ..plans.checkpoint import CheckpointManager
+from ..plans.pipeline import PipelineConfig, extract_and_commit
 
 STAGE_STREAM = "extract_stream"
 
@@ -55,91 +49,24 @@ def _lineage_token(checkpoint_location: str) -> str:
         return "nolineage"
 
 
-def _is_preupgrade_lineage(spark, ckpt, checkpoint_location: str) -> bool:
-    """True iff the CURRENT checkpoint predates the newest legacy
-    (pre-token, ``stream-b<NNNNNN>``) manifest commit — i.e. it is the
-    same lineage that wrote those commits, upgraded in place. A FRESH
-    checkpoint (created after the legacy commits, batch ids restarting
-    at 0) must NOT match: its batches carry re-read data and skipping
-    them on a name collision silently drops rows — the exact trap the
-    lineage token exists to prevent."""
-    import datetime
-
-    try:
-        meta_mtime = os.stat(os.path.join(checkpoint_location, "metadata")).st_mtime
-    except OSError:
-        return False  # no checkpoint metadata: cannot be the pre-upgrade query
-    row = (
-        ckpt.manifest(spark)
-        .filter(
-            (F.col("stage") == STAGE_STREAM)
-            & F.col("run_dir").rlike("^stream-b[0-9]{6}$")
-        )
-        .agg(F.max("committed_at").alias("mx"))
-        .collect()
-    )
-    mx = row[0].mx if row else None
-    if mx is None:
-        return False
-    return meta_mtime < mx.replace(tzinfo=datetime.timezone.utc).timestamp()
-
-
 def make_extraction_sink(out_dir: str, cfg: PipelineConfig, checkpoint_location: str):
     """The foreachBatch sink as a standalone callable (unit-testable:
     tests replay a batch id directly to pin the idempotence contract)."""
-    staged_root = os.path.join(out_dir, "extracted")
-    preupgrade_cache: dict[str, bool] = {}
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        ckpt = CheckpointManager(out_dir)
         run_dir = f"stream-{_lineage_token(checkpoint_location)}-b{batch_id:06d}"
-        # pre-token protocol named run dirs "stream-b<NNNNNN>": a store
-        # upgraded over a live checkpoint replays its last batch under
-        # the NEW name — match the legacy name too or the replay commits
-        # that batch's rows a second time. Scope: ONLY when this
-        # checkpoint IS the pre-upgrade lineage (it predates the legacy
-        # commits); a fresh lineage re-ingests visibly instead of
-        # silently dropping its colliding batch ids.
-        legacy_run_dir = f"stream-b{batch_id:06d}"
-        committed = ckpt.committed_run_dirs(spark, STAGE_STREAM)
-        legacy_hit = False
-        if legacy_run_dir in committed:
-            # setdefault would evaluate the lineage probe (manifest
-            # scan + collect + os.stat) eagerly on EVERY colliding
-            # batch — guard explicitly so it runs once per query
-            if "v" not in preupgrade_cache:
-                preupgrade_cache["v"] = _is_preupgrade_lineage(
-                    spark, ckpt, checkpoint_location
-                )
-            legacy_hit = preupgrade_cache["v"]
-        if run_dir in committed or legacy_hit:
+        if run_dir in CheckpointManager(out_dir).committed_run_dirs(spark, STAGE_STREAM):
             # replayed, already-committed batch: no data effects — but
             # the upstream stateful dedup still needs every partition
             # processed for its state-store commit (Spark 4 validates
             # this), so drain the batch through the noop sink.
             batch_df.write.format("noop").mode("overwrite").save()
             return
-        t = with_part_key(
-            batch_df.withColumn("ts", F.col("ts").cast("timestamp_ntz")),
-            cfg.n_buckets,
-        )
-        # conv_id, not part_key: satisfies the stable-order window's
-        # required distribution — avoids a second full-text Exchange
-        # (see plans/pipeline.py extract_stage)
-        ordered = with_stable_order(t.repartition(cfg.n_buckets, "conv_id"))
-        staged = with_part_key(extract_all_flat(ordered), cfg.n_buckets)
-        path = os.path.join(staged_root, run_dir)
         # overwrite: a crash-retry of this batch must not append twice
-        staged.write.mode("overwrite").parquet(path)
-        staged_new = spark.read.schema(_staged_with_key()).parquet(path)
-        ckpt.record(
-            partition_metrics(
-                t.select("part_key", "conv_id", "turn_idx", "text"),
-                staged_new.filter(F.col("row_type") == "t"),
-            ),
-            STAGE_STREAM,
-            run_dir=run_dir,
+        extract_and_commit(
+            spark, batch_df.withColumn("ts", F.col("ts").cast("timestamp_ntz")),
+            out_dir, cfg, STAGE_STREAM, run_dir=run_dir, mode="overwrite",
         )
 
     return sink

@@ -1,17 +1,12 @@
-"""Extraction (B6/B7) vs the frozen oracle, both UDF shapes."""
+"""Extraction (B6/B7) vs the frozen oracle, through the one kernel."""
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
+from pysql2neo4j_spark.corpus import normalize_surface
 from pysql2neo4j_spark.operators.extraction import (
-    extract_mentions_flat,
-    extract_triples_flat,
-    mentions_from_flat,
-    mentions_table,
-    triples_from_flat,
-    triples_table,
-    with_extraction,
+    extract_all_flat,
+    mentions_from_staged,
+    triples_from_staged,
 )
 from pysql2neo4j_spark.oracle_extractor import reference_mentions, reference_triples
 
@@ -20,43 +15,34 @@ def _mention_set(rows):
     return {(r.conv_id, r.turn_idx, r.surface, r.norm, r.start, r.end) for r in rows}
 
 
-def _triple_set(rows):
-    return {
-        (r.conv_id, r.turn_idx, r.subj_surface, r.pred, r.obj_surface, r.subj_start, r.obj_start)
-        for r in rows
-    }
+def _triple_key(conv_id, turn_idx, subj_start, pred, obj_start, subj_norm, obj_norm):
+    return (conv_id, turn_idx, f"{conv_id}:{turn_idx}:{subj_start}", pred,
+            f"{conv_id}:{turn_idx}:{obj_start}", subj_norm, obj_norm)
 
 
 def test_flat_extractors_match_oracle(spark, corpus_pdf, transcripts_df):
     pdf, _ = corpus_pdf
-    got_m = extract_mentions_flat(transcripts_df).collect()
+    staged = extract_all_flat(transcripts_df)
+    got_m = mentions_from_staged(staged).collect()
     ref_m = reference_mentions(pdf)
     assert _mention_set(got_m) == _mention_set(ref_m.itertuples())
 
-    got_t = extract_triples_flat(transcripts_df).collect()
-    ref_t = reference_triples(pdf)
-    assert _triple_set(got_t) == _triple_set(ref_t.itertuples())
-
-
-def test_nested_udf_matches_flat(spark, transcripts_df):
-    """The nested-array pandas UDF and the flat mapInPandas kernels are
-    two shapes of the same extractor."""
-    ex = with_extraction(transcripts_df)
-    nested_m = mentions_table(ex).collect()
-    flat_m = mentions_from_flat(extract_mentions_flat(transcripts_df)).collect()
-    key = lambda r: (r.conv_id, r.turn_idx, r.mention_id, r.surface, r.norm, r.start, r.end)
-    assert sorted(map(key, nested_m)) == sorted(map(key, flat_m))
-
-    nested_t = triples_table(ex).collect()
-    flat_t = triples_from_flat(extract_triples_flat(transcripts_df)).collect()
-    tkey = lambda r: (r.conv_id, r.turn_idx, r.subj_mention, r.pred, r.obj_mention)
-    assert sorted(map(tkey, nested_t)) == sorted(map(tkey, flat_t))
+    got_t = {
+        (r.conv_id, r.turn_idx, r.subj_mention, r.pred, r.obj_mention, r.subj_norm, r.obj_norm)
+        for r in triples_from_staged(staged).collect()
+    }
+    ref_t = {
+        _triple_key(r.conv_id, r.turn_idx, r.subj_start, r.pred, r.obj_start,
+                    normalize_surface(r.subj_surface), normalize_surface(r.obj_surface))
+        for r in reference_triples(pdf).itertuples()
+    }
+    assert got_t == ref_t
 
 
 def test_offsets_point_at_surfaces(spark, corpus_pdf, transcripts_df):
     pdf, _ = corpus_pdf
     texts = {(r.conv_id, r.turn_idx): r.text for r in pdf.itertuples()}
-    for r in extract_mentions_flat(transcripts_df).collect():
+    for r in mentions_from_staged(extract_all_flat(transcripts_df)).collect():
         assert texts[(r.conv_id, r.turn_idx)][r.start : r.end] == r.surface
 
 
@@ -65,5 +51,4 @@ def test_zero_mention_turns_emit_nothing(spark):
     from pysql2neo4j_spark.schemas import TRANSCRIPT_SCHEMA
 
     df = spark.createDataFrame(rows, schema=TRANSCRIPT_SCHEMA)
-    assert extract_mentions_flat(df).count() == 0
-    assert extract_triples_flat(df).count() == 0
+    assert extract_all_flat(df).count() == 0

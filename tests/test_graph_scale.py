@@ -52,13 +52,11 @@ def test_multi_edge_provenance_exact(spark):
 
 
 def test_build_nodes_matches_rollup_path(spark):
-    """The pipeline builds nodes from linking's (norm, surface, n)
-    rollup (r6); ``build_nodes`` remains the self-contained operator
-    for callers holding a linked-mentions frame. This pins the claimed
-    row-for-row equivalence of the two paths — including the
-    most-frequent-surface election with its (count desc, surface asc)
-    tiebreak — so neither can drift silently."""
-    from pysql2neo4j_spark.operators.graph import build_nodes, nodes_from_surface_stats
+    """Nodes build from linking's (norm, surface, n) rollup joined to
+    canonical ids. This pins the most-frequent-surface election with
+    its (count desc, surface asc) tiebreak, the alias set and the
+    mention counts."""
+    from pysql2neo4j_spark.operators.graph import nodes_from_surface_stats
     from pysql2neo4j_spark.operators.linking import surface_stats
 
     rows = (
@@ -72,9 +70,6 @@ def test_build_nodes_matches_rollup_path(spark):
         [("ada lovelace", "ada"), ("a lovelace", "ada"), ("queryforge", "qf")],
         ["norm", "entity_id"],
     )
-    linked = mentions.join(f2e, "norm")
-
-    via_operator = build_nodes(linked)
     surf = surface_stats(mentions)
     via_rollup = nodes_from_surface_stats(
         surf.join(f2e, "norm").select("entity_id", "surface", "norm", "n")
@@ -86,8 +81,8 @@ def test_build_nodes_matches_rollup_path(spark):
             for r in df.collect()
         )
 
-    got = canon(via_operator)
-    assert got == canon(via_rollup)
+    got = canon(via_rollup)
+    assert [r[0] for r in got] == ["ada", "qf"]
     by_id = {r[0]: r for r in got}
     # tie at n=3 between 'Ada Lovelace' and 'ada lovelace' -> lexicographic min
     assert by_id["ada"][2] == "Ada Lovelace"

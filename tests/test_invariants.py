@@ -6,8 +6,8 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from pysql2neo4j_spark.operators.extraction import extract_triples_flat
-from pysql2neo4j_spark.operators.ordering import repartition_by_conv, with_stable_order
+from pysql2neo4j_spark.operators.extraction import extract_all_flat, triples_from_staged
+from pysql2neo4j_spark.operators.ordering import with_stable_order
 
 
 def _ordered_turns(df):
@@ -21,7 +21,7 @@ def test_stable_ordering_invariant_under_shuffle(spark, transcripts_df):
     base = _ordered_turns(transcripts_df)
     shuffled = transcripts_df.orderBy(F.rand(seed=1))
     assert _ordered_turns(shuffled) == base
-    repart = repartition_by_conv(transcripts_df, 17)
+    repart = transcripts_df.repartition(17, F.xxhash64("conv_id"))
     assert _ordered_turns(repart) == base
     one = transcripts_df.coalesce(1)
     assert _ordered_turns(one) == base
@@ -30,8 +30,8 @@ def test_stable_ordering_invariant_under_shuffle(spark, transcripts_df):
 def test_triple_set_invariant_under_partitioning(spark, transcripts_df):
     def tset(df):
         return {
-            (r.conv_id, r.turn_idx, r.subj_surface, r.pred, r.obj_surface)
-            for r in extract_triples_flat(df).collect()
+            (r.conv_id, r.turn_idx, r.subj_mention, r.pred, r.obj_mention)
+            for r in triples_from_staged(extract_all_flat(df)).collect()
         }
 
     base = tset(transcripts_df)

@@ -1,17 +1,16 @@
-"""Entity linking (B8-B13): blocking recall, scoring margins, top-1."""
+"""Entity linking (B8-B12): blocking recall, block caps, scoring margins."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
 from pysql2neo4j_spark.corpus import build_gazetteer, normalize_surface
-from pysql2neo4j_spark.operators.extraction import extract_mentions_flat, mentions_from_flat
+from pysql2neo4j_spark.operators.extraction import extract_all_flat, mentions_from_staged
 from pysql2neo4j_spark.operators.linking import (
     candidate_pairs,
     distinct_forms,
     link_candidates,
     score_pairs,
-    top1_links,
 )
 
 
@@ -19,7 +18,7 @@ def test_candidate_recall_connects_every_entity(spark, transcripts_df):
     """After blocking + scoring, every entity whose aliases appear in
     the corpus must form a single connected component (checked with a
     pure-python union-find oracle over the verified edges)."""
-    mentions = mentions_from_flat(extract_mentions_flat(transcripts_df))
+    mentions = mentions_from_staged(extract_all_flat(transcripts_df))
     forms, edges, _ = link_candidates(mentions)
     norms_seen = {r.norm for r in forms.collect()}
     edge_list = [(r.norm_a, r.norm_b) for r in edges.collect()]
@@ -60,22 +59,6 @@ def test_block_cap_drops_stopword_blocks(spark):
     # the 'tok:common' block (200 members) must be dropped; pairs only
     # come from band/pfx/sfx blocks
     assert cand.count() < 200 * 199 / 2
-
-
-def test_top1_links_deterministic(spark):
-    import pandas as pd
-
-    pdf = pd.DataFrame(
-        {
-            "norm_a": ["x", "x", "x", "y"],
-            "norm_b": ["p", "q", "r", "p"],
-            "score": [0.9, 0.9, 0.8, 0.7],
-        }
-    )
-    links = top1_links(spark.createDataFrame(pdf), by="norm_a").collect()
-    got = {(r.norm_a, r.norm_b) for r in links}
-    # tie at 0.9 broken by partner norm ascending -> p
-    assert got == {("x", "p"), ("y", "p")}
 
 
 def test_scoring_threshold_boundaries(spark):

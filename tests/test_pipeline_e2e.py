@@ -4,8 +4,6 @@
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import functions as F
 
 from pysql2neo4j_spark.oracle_extractor import reference_canonical_triples
@@ -87,53 +85,31 @@ def test_crash_before_manifest_commit_no_duplicates(
 
 
 def test_resume_from_legacy_flat_manifest(spark, transcripts_df, tmp_out):
-    """ADVICE r2 backward compat: a stage store committed BEFORE the
-    run-dir protocol has null run_dir rows and its staged rows flat
-    under extracted/. Resuming over it must read that data (not
-    silently drop every previously committed partition) and the final
-    graph must equal a single fresh run."""
-    import glob
+    """A manifest whose commits carry no run_dir (staged rows flat under
+    extracted/, a layout this reader does not support) is refused with
+    a clear error instead of silently dropping those partitions, whose
+    keys still count as complete for the resume filter."""
     import shutil
 
-    cfg = PipelineConfig(n_buckets=8)
-    keyed = with_part_key(transcripts_df, cfg.n_buckets)
-    first_half = keyed.filter(F.col("part_key") < 4).drop("part_key")
-
-    out = tmp_out + "_legacy"
-    build_graph(spark, first_half, out, cfg)
-
-    # downgrade the store to the pre-run-dir layout: flatten the run
-    # dir's part files into extracted/ and null out run_dir rows
-    staged_root = os.path.join(out, "extracted")
-    run_dirs = [d for d in os.listdir(staged_root) if d.startswith("run-")]
-    assert len(run_dirs) == 1
-    for f in glob.glob(os.path.join(staged_root, run_dirs[0], "part-*.parquet")):
-        shutil.move(f, staged_root)
-    shutil.rmtree(os.path.join(staged_root, run_dirs[0]))
-    ck = CheckpointManager(out)
-    legacy = ck.manifest(spark).withColumn("run_dir", F.lit(None).cast("string"))
-    legacy_rows = legacy.collect()
-    shutil.rmtree(ck.manifest_path)
-    spark.createDataFrame(legacy_rows, schema=legacy.schema).write.parquet(
-        ck.manifest_path
-    )
-
-    res_resumed = build_graph(spark, transcripts_df, out, cfg)
-    res_single = build_graph(spark, transcripts_df, tmp_out, cfg)
-    assert res_resumed["mentions"].count() == res_single["mentions"].count()
-    a = sorted(map(tuple, _canon_triples(res_resumed).distinct().collect()))
-    b = sorted(map(tuple, _canon_triples(res_single).distinct().collect()))
-    assert a == b
-
-    # and the refusal path: legacy rows present but flat data gone
     import pytest
 
     from pysql2neo4j_spark.plans.pipeline import read_committed_ir
 
-    for f in glob.glob(os.path.join(staged_root, "part-*.parquet")):
-        os.remove(f)
-    with pytest.raises(ValueError, match="legacy flat staged"):
-        read_committed_ir(spark, out, cfg)
+    cfg = PipelineConfig(n_buckets=8)
+    keyed = with_part_key(transcripts_df, cfg.n_buckets)
+    first_half = keyed.filter(F.col("part_key") < 4).drop("part_key")
+    build_graph(spark, first_half, tmp_out, cfg)
+
+    ck = CheckpointManager(tmp_out)
+    legacy_rows = ck.manifest(spark).withColumn("run_dir", F.lit(None).cast("string"))
+    legacy_rows = spark.createDataFrame(legacy_rows.collect(), schema=legacy_rows.schema)
+    shutil.rmtree(ck.manifest_path)
+    legacy_rows.write.parquet(ck.manifest_path)
+
+    with pytest.raises(ValueError, match="no run_dir"):
+        read_committed_ir(spark, tmp_out, cfg)
+    with pytest.raises(ValueError, match="no run_dir"):
+        build_graph(spark, transcripts_df, tmp_out, cfg)
 
 
 def test_edges_carry_provenance_and_counts(spark, transcripts_df, tmp_out):
@@ -295,3 +271,34 @@ def test_verify_resume_integrity_multi_commit_partition(
         verify_resume_integrity(
             spark, mutated, tmp_out, STAGE_EXTRACT, n_buckets=cfg.n_buckets
         )
+
+
+def test_run_concurrently_waits_for_all_then_raises_first():
+    """The shared write helper: results come back in argument order, and
+    a failure surfaces only after every other callable has finished, so
+    no writer thread outlives the call."""
+    import threading
+    import time
+
+    import pytest
+
+    from pysql2neo4j_spark.plans.pipeline import run_concurrently
+
+    assert run_concurrently(lambda: 1, lambda: 2, lambda: 3) == [1, 2, 3]
+
+    finished = threading.Event()
+
+    def fail():
+        raise RuntimeError("first")
+
+    def slow():
+        time.sleep(0.3)
+        finished.set()
+
+    def fail_later():
+        time.sleep(0.1)
+        raise ValueError("second")
+
+    with pytest.raises(RuntimeError, match="first"):
+        run_concurrently(fail, slow, fail_later)
+    assert finished.is_set()

@@ -214,77 +214,3 @@ def test_stream_restart_continues_incrementally(spark, transcripts_df, tmp_out):
     dirs_after = set(ck.committed_run_dirs(spark, STAGE_STREAM))
     new_dirs = dirs_after - dirs_before
     assert new_dirs and dirs_before < dirs_after  # continued, not replayed
-
-
-def test_legacy_run_dir_replay_guard(spark, transcripts_df, tmp_out):
-    """ADVICE r3 (low) + r4 review: run dirs committed by the PRE-TOKEN
-    protocol ("stream-b<NNNNNN>") satisfy the replay guard ONLY for the
-    checkpoint lineage that wrote them (upgraded in place — its
-    metadata predates the commits). A FRESH lineage whose batch ids
-    restart at 0 must NOT match the legacy names: it re-ingests
-    visibly instead of silently dropping data."""
-    import json as _json
-    import time as _time
-
-    from pysql2neo4j_spark.operators.extraction import extract_all_flat
-    from pysql2neo4j_spark.operators.ordering import with_stable_order
-    from pysql2neo4j_spark.plans.checkpoint import partition_metrics, with_part_key
-    from pysql2neo4j_spark.streaming.bridge import make_extraction_sink
-
-    cfg = PipelineConfig(n_buckets=8)
-    out = os.path.join(tmp_out, "graph")
-    ckpt_loc = os.path.join(out, "_stream_checkpoint")
-
-    # the pre-upgrade query's checkpoint exists BEFORE its commits
-    os.makedirs(ckpt_loc, exist_ok=True)
-    with open(os.path.join(ckpt_loc, "metadata"), "w") as fh:
-        _json.dump({"id": "00000000-1111-2222-3333-444444444444"}, fh)
-    _time.sleep(1.1)
-
-    # commit batch 0 exactly as the pre-upgrade sink did: staged rows
-    # under the un-tokenized name, manifest row referencing it
-    t = with_part_key(
-        transcripts_df.withColumn("ts", F.col("ts").cast("timestamp_ntz")),
-        cfg.n_buckets,
-    )
-    staged = with_part_key(
-        extract_all_flat(with_stable_order(t.repartition(cfg.n_buckets, "conv_id"))),
-        cfg.n_buckets,
-    )
-    legacy = "stream-b000000"
-    staged.write.mode("overwrite").parquet(os.path.join(out, "extracted", legacy))
-    ck = CheckpointManager(out)
-    ck.record(
-        partition_metrics(
-            t.select("part_key", "conv_id", "turn_idx", "text"),
-            staged.filter(F.col("row_type") == "t"),
-        ),
-        STAGE_STREAM,
-        run_dir=legacy,
-    )
-    before = ck.manifest(spark).count()
-
-    # upgraded sink, SAME checkpoint lineage, replays batch 0: skipped
-    sink = make_extraction_sink(out, cfg, ckpt_loc)
-    sink(transcripts_df, 0)
-    assert ck.manifest(spark).count() == before
-    assert ck.committed_run_dirs(spark, STAGE_STREAM) == [legacy]
-
-    # a genuinely NEW batch id still commits under the new naming
-    sink(transcripts_df.limit(50), 1)
-    after_new = ck.manifest(spark).count()
-    assert after_new > before
-    assert len(ck.committed_run_dirs(spark, STAGE_STREAM)) == 2
-
-    # FRESH lineage: checkpoint lost and recreated AFTER the legacy
-    # commits — its batch 0 collides with the legacy NAME but carries
-    # re-read data; it must COMMIT (visible re-ingest), never skip
-    fresh_loc = os.path.join(out, "_stream_checkpoint_fresh")
-    os.makedirs(fresh_loc, exist_ok=True)
-    _time.sleep(1.1)
-    with open(os.path.join(fresh_loc, "metadata"), "w") as fh:
-        _json.dump({"id": "99999999-8888-7777-6666-555555555555"}, fh)
-    sink_fresh = make_extraction_sink(out, cfg, fresh_loc)
-    sink_fresh(transcripts_df.limit(30), 0)
-    assert ck.manifest(spark).count() > after_new
-    assert len(ck.committed_run_dirs(spark, STAGE_STREAM)) == 3
