@@ -504,11 +504,14 @@ def duplicated_ngram_spans(
     # on the optimizer rewrite, and a future SECOND distinct aggregate
     # here would flip the declarative form into the Expand plan that
     # doubles the span shuffle.
+    # n_docs counts doc_id, not rows: a null-doc_id group is no
+    # document (count(DISTINCT doc_id)) but its spans still count in
+    # n_total
     per_doc = g.groupBy("span", "doc_id").agg(F.count("*").alias("__n"))
     return (
         per_doc.groupBy("span")
         .agg(
-            F.count("*").alias("n_docs"),
+            F.count("doc_id").alias("n_docs"),
             F.sum("__n").cast("long").alias("n_total"),
         )
         .filter(F.col("n_total") >= min_total)

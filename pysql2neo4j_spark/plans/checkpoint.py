@@ -22,14 +22,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..schemas import CHECKPOINT_SCHEMA
+from ..sources.transcripts import bucket_of
 
 MANIFEST_DIR = "_checkpoints"
 
 
 def with_part_key(df: DataFrame, n_buckets: int, col: str = "conv_id") -> DataFrame:
-    return df.withColumn(
-        "part_key", F.pmod(F.xxhash64(F.col(col)), F.lit(n_buckets)).cast("int")
-    )
+    return df.withColumn("part_key", bucket_of(col, n_buckets))
 
 
 class CheckpointManager:

@@ -66,7 +66,7 @@ from ..operators.components import canonical_entities
 from ..operators.graph import PROVENANCE_CAP, build_edges, nodes_from_surface_stats
 from ..operators.linking import delta_candidate_pairs, score_pairs, surface_stats
 from ..schemas import EDGES_SCHEMA
-from ..sources.transcripts import write_bucketed
+from ..sources.transcripts import bucket_of, cluster_buckets, write_bucketed
 from .checkpoint import CheckpointManager
 from .pipeline import (
     PipelineConfig,
@@ -106,10 +106,6 @@ def _vdir(out_dir: str, version: int, name: str) -> str:
     return os.path.join(out_dir, STATE_DIR, f"v{version:04d}", name)
 
 
-def _bucket_of(col: str, n_buckets: int):
-    return F.pmod(F.xxhash64(F.col(col)), F.lit(n_buckets)).cast("int")
-
-
 def _publish_delta(
     spark: SparkSession,
     out_dir: str,
@@ -146,12 +142,12 @@ def _publish_delta(
         aff = F.broadcast(spark.createDataFrame([(int(p),) for p in affected_pks] or [(None,)],
                                                 "part_key INT"))
         to_write = (
-            merged.withColumn("part_key", _bucket_of("src_entity", n))
-            .unionByName(untouched.withColumn("part_key", _bucket_of("src_entity", n)))
+            merged.withColumn("part_key", bucket_of("src_entity", n))
+            .unionByName(untouched.withColumn("part_key", bucket_of("src_entity", n)))
             .join(aff, on="part_key", how="left_semi")
             .select(*[f.name for f in EDGES_SCHEMA.fields], "part_key")
         )
-        to_write = to_write.repartition(max(len(affected_pks), 1), "part_key")
+        to_write = cluster_buckets(to_write, len(affected_pks))
         written_pks = set()
         if affected_pks:
             # fuse the written-bucket probe into the checkpoint job
@@ -232,7 +228,7 @@ def _merge_edges(
                 .withColumnRenamed("new_entity", "__dst_new"),
               on="dst_entity", how="left")
         .withColumn("__rm", F.col("__src_new").isNotNull() | F.col("__dst_new").isNotNull())
-        .withColumn("__old_pk", _bucket_of("src_entity", n_buckets))
+        .withColumn("__old_pk", bucket_of("src_entity", n_buckets))
         .withColumn("src_entity", F.coalesce("__src_new", "src_entity"))
         .withColumn("dst_entity", F.coalesce("__dst_new", "dst_entity"))
         .drop("__src_new", "__dst_new")
@@ -277,7 +273,7 @@ def _merge_edges(
         cache_registry.append(merged)
     affected = (
         touched.select(F.col("__old_pk").alias("part_key"))
-        .unionByName(merged.select(_bucket_of("src_entity", n_buckets).alias("part_key")))
+        .unionByName(merged.select(bucket_of("src_entity", n_buckets).alias("part_key")))
         .distinct()
     )
     return untouched, merged, affected

@@ -293,8 +293,9 @@ def materialize_graph(
     # nodes and edges are INDEPENDENT tables into a fresh out_dir (no
     # publish-ordering constraint — that exists only in the delta
     # finalize, where state must land before the live dirs mutate), so
-    # the two writes run concurrently: the vocabulary-sized nodes job
-    # back-fills executors idled by the edge job's tail. The threaded
+    # the two writes run concurrently. Each is one wave of tasks
+    # (cluster_buckets), so the small nodes write cannot hold every
+    # core and queue the edge rollup's stages behind it. The threaded
     # timer records each write's own wall span.
     def _timed_write(df, sub, key):
         t0 = time.time()

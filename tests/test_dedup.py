@@ -138,6 +138,23 @@ def test_spread_definition_runs_no_jobs(spark, tmp_path):
     assert plan.count() >= 0
 
 
+def test_duplicated_spans_null_doc_id(spark):
+    """A null doc_id is no document: its spans count in n_total but not
+    in n_docs, as count(DISTINCT doc_id) in the oracle has it."""
+    from pysql2neo4j_spark.operators.dedup import duplicated_ngram_spans
+
+    header = "subscribe to our newsletter for weekly updates"
+    docs = [
+        (1, f"{header} alpha bravo"),
+        (2, f"{header} charlie delta"),
+        (None, f"{header} echo foxtrot"),
+    ]
+    df = spark.createDataFrame(docs, "doc_id LONG, text STRING")
+    got = {r.span: (r.n_docs, r.n_total)
+           for r in duplicated_ngram_spans(df, "doc_id", "text", n=5, min_total=3).collect()}
+    assert got[" ".join(header.split()[:5])] == (2, 3)
+
+
 def test_boilerplate_span_detection(spark):
     """Planted boilerplate: a fixed header sentence prepended to several
     otherwise-unique documents must be flagged span-by-span, including

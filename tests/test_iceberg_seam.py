@@ -48,6 +48,13 @@ def test_iceberg_real_writer_roundtrip(spark, tmp_out):
     assert {f.name for f in back.schema.fields} >= {"id", "entity_id"}
 
 
+def assert_one_file_per_bucket(path):
+    for d in os.listdir(path):
+        if d.startswith("part_key="):
+            files = [f for f in os.listdir(os.path.join(path, d)) if f.endswith(".parquet")]
+            assert len(files) == 1, f"{d} holds {len(files)} data files"
+
+
 def test_parquet_twin_same_bucket_spec(spark, tmp_out):
     """The parquet side of the seam: same bucket count, deterministic
     xxhash64 bucket assignment, one directory per bucket."""
@@ -56,6 +63,7 @@ def test_parquet_twin_same_bucket_spec(spark, tmp_out):
     write_bucketed(df, path, "entity_id", n_buckets=8, catalog="parquet")
     parts = sorted(d for d in os.listdir(path) if d.startswith("part_key="))
     assert len(parts) == 8
+    assert_one_file_per_bucket(path)
     back = spark.read.parquet(path)
     assert back.count() == 200
     # bucket assignment is the documented formula — re-derivable
@@ -63,3 +71,29 @@ def test_parquet_twin_same_bucket_spec(spark, tmp_out):
         "expect", F.pmod(F.xxhash64(F.col("entity_id")), F.lit(8)).cast("int")
     )
     assert rederived.filter(F.col("part_key") != F.col("expect")).count() == 0
+
+
+def test_parquet_twin_write_is_one_wave(spark, tmp_out):
+    """More buckets than cores: the write runs at most defaultParallelism
+    tasks per stage, and every bucket is still exactly one file."""
+    sc = spark.sparkContext
+    cores = sc.defaultParallelism
+    n_buckets = 8 * cores
+    df = spark.range(50 * n_buckets).withColumn("entity_id", F.concat(F.lit("e"), F.col("id")))
+    path = os.path.join(tmp_out, "seam_one_wave")
+    sc.setJobGroup("bucket_write", "one-wave bucketed write")
+    try:
+        write_bucketed(df, path, "entity_id", n_buckets=n_buckets, catalog="parquet")
+        tracker = sc.statusTracker()
+        jobs = tracker.getJobIdsForGroup("bucket_write")
+        stages = [s for j in jobs for s in tracker.getJobInfo(j).stageIds]
+        infos = [tracker.getStageInfo(s) for s in stages]
+    finally:
+        sc.setJobGroup("", "")
+    assert jobs and all(i is not None for i in infos)
+    tasks = [i.numTasks for i in infos]
+    assert max(tasks) <= cores, f"stage task counts {tasks} exceed {cores} cores"
+    parts = [d for d in os.listdir(path) if d.startswith("part_key=")]
+    assert len(parts) == n_buckets
+    assert_one_file_per_bucket(path)
+    assert spark.read.parquet(path).count() == df.count()

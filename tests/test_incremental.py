@@ -79,6 +79,12 @@ def test_incremental_finalize_equals_batch_build(spark, transcripts_df, tmp_out)
     assert res2["metrics"]["mode"] == "incremental"
     assert read_state_meta(out)["version"] == 1
     assert res2["metrics"]["n_delta_run_dirs"] >= 1
+    # the selective edge publish keeps the layout: one file per bucket
+    edges_dir = os.path.join(out, "edges")
+    for d in os.listdir(edges_dir):
+        if d.startswith("part_key="):
+            files = [f for f in os.listdir(os.path.join(edges_dir, d)) if f.endswith(".parquet")]
+            assert len(files) == 1, f"edges/{d} holds {len(files)} data files"
 
     # the incremental run touched ONLY the delta IR: observed mention
     # rows read are the second half's, strictly fewer than the total
