@@ -1,51 +1,14 @@
-"""MinHash / SimHash / LSH banding — pure Column expressions.
+"""SimHash, hash splits and hash sampling — pure Column expressions.
 
-k independent MinHash functions are derived from one 64-bit hash family
-(`xxhash64(shingle, seed_i)`) — standard practice; seeds are fixed so
-signatures are deterministic across runs and partitionings. Everything
-stays JVM-side (higher-order array functions), so signatures for a
-100 TB corpus never touch Python.
+Everything stays JVM-side (builtins and higher-order array functions),
+so signatures for a 100 TB corpus never touch Python. MinHash LSH band
+buckets are a DataFrame operator, ``operators/dedup.minhash_band_buckets``.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-
-MINHASH_K_DEFAULT = 48  # 12 bands x 4 rows
-
-
-def minhash_signature(shingles: Column, k: int = MINHASH_K_DEFAULT) -> Column:
-    """array<bigint> of k minhash values over an array<string> column.
-
-    The hash family is ``xxhash64(shingle, i)`` for i in [0, k) — one
-    64-bit hash per (shingle, index) pair. Built as a single nested
-    ``transform`` over ``sequence(0, k-1)`` so the plan carries ONE
-    expression tree; the naive ``F.array(*[... for i in range(k)])``
-    duplicates the whole shingle scan k times in the physical plan and
-    blows up codegen (measured: minutes vs. seconds on tiny inputs).
-    Empty shingle sets hash the empty string so the signature is total."""
-    safe = F.when(F.size(shingles) > 0, shingles).otherwise(F.array(F.lit("")))
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(k - 1)),
-        lambda i: F.array_min(F.transform(safe, lambda s: F.xxhash64(s, i))),
-    )
-
-
-def band_keys(signature: Column, bands: int, rows: int) -> Column:
-    """array<bigint> of LSH band keys: hash of each band's row slice,
-    band index mixed in so buckets from different bands never collide.
-    Single nested transform for the same codegen reason as above."""
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(bands - 1)),
-        lambda b: F.xxhash64(
-            b,
-            F.concat_ws(
-                ",",
-                F.transform(F.slice(signature, b * rows + 1, rows), lambda x: x.cast("string")),
-            ),
-        ),
-    )
 
 
 def simhash64(tokens_col: Column) -> Column:

@@ -106,28 +106,26 @@ def exact_dup_groups(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
 
 
 def minhash_band_buckets(sh: DataFrame, bands: int, rows: int) -> DataFrame:
-    """(id, bucket) LSH band buckets over a materialized (id, sh)
-    shingle frame, in the CODEGEN shape (r7): the declarative form —
-    ``band_keys(minhash_signature(sh))`` — nests lambdas inside
-    ``transform(sequence(0, k-1), ...)``, and Catalyst evaluates every
-    higher-order lambda INTERPRETED, one closure call per (shingle,
-    hash-index) pair: k x |shingles| interpreted xxhash64 evals per
-    doc, measured as 33 s of the 35 s sf0.1 ``dedup_minhash_lsh`` key
-    (the whole rest of the query is ~2 s) — and worse once the suite's
-    query mix leaves the interpreter's call sites megamorphic.
+    """(id, bucket) LSH band buckets over an (id, sh) shingle frame —
+    THE package's one minhash construction (dedup's
+    ``minhash_lsh_pairs`` and linking's ``blocking_keys`` both call it).
+    The hash family is ``xxhash64(shingle, i)`` for i in [0, k), and a
+    band's bucket is ``xxhash64(band index, comma-joined row minima)``.
     Exploding the shingle array and computing the k hashes as ordinary
-    ``xxhash64(s, INT i)`` projections puts the same arithmetic back
-    into whole-stage codegen; the k ``min`` aggregates are map-side
+    ``xxhash64(s, INT i)`` projections keeps the arithmetic in
+    whole-stage codegen (r7: the declarative nested-lambda form
+    Catalyst evaluates interpreted, one closure call per (shingle,
+    hash-index) pair — measured as 33 s of the 35 s sf0.1
+    ``dedup_minhash_lsh`` key); the k ``min`` aggregates are map-side
     combined, so the shuffle carries one partial row per doc per
-    partition, not the shingle stream. Hash-identical to
-    ``minhash_signature``/``band_keys`` (same hash family, same band
-    concat) — asserted bucket-for-bucket against the declarative form
-    in tests/test_dedup.py::test_minhash_codegen_buckets_match_declarative,
-    which calls THIS function (one construction, no hand-synced copy).
+    partition, not the shingle stream. The declarative form lives on as
+    the reference spec in tests/test_dedup.py, which asserts this
+    function bucket-for-bucket against it.
 
-    ``sh`` must already be materialized/checkpointed by the caller —
-    the shingle expression is the most expensive tree in the plan and
-    must not be re-inlined into the explode."""
+    An id with an empty shingle array gets no buckets (the explode
+    drops it). ``sh`` needs materializing only when it has more than
+    one consumer — dedup checkpoints it because verification reads it
+    too; linking's blocking passes the expression inline."""
     k = bands * rows
     ex = sh.select("id", F.explode("sh").alias("s"))
     sig = ex.groupBy("id").agg(

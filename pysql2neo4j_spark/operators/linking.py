@@ -33,8 +33,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.hashing import band_keys, minhash_signature
 from ..functions.text import adaptive_containment, char_shingles
+from .dedup import minhash_band_buckets
 
 # Separation margins measured over the full gazetteer (tests/test_linking.py):
 # max cross-entity pair score = 0.600, min within-entity best-bridge = 0.667.
@@ -42,8 +42,8 @@ DEFAULT_THRESHOLD = 0.63
 # 12 bands x 2 rows: P(candidate | J=0.6) > 0.99 — and the deterministic
 # token/prefix/suffix blocks already connect every gazetteer entity on
 # their own (tests/test_linking.py), so bands are redundancy, not the
-# recall path. k=24 halves the dominant fixed cost of the band branch
-# (codegen + interpreted lambda evaluation of the signature).
+# recall path. k=24 halves the band branch's per-shingle hash work
+# (k xxhash64 projections and k min aggregates).
 DEFAULT_BANDS = 12
 DEFAULT_ROWS = 2
 DEFAULT_MAX_BLOCK = 64
@@ -57,10 +57,10 @@ def distinct_forms(mentions: DataFrame) -> DataFrame:
 def blocking_keys(forms: DataFrame, bands: int = DEFAULT_BANDS, rows: int = DEFAULT_ROWS) -> DataFrame:
     """(norm, block_key) pairs from token blocks ∪ minhash LSH bands.
 
-    ``forms`` MUST carry a materialized ``sh`` (char-shingles) column —
-    passing the shingle *expression* instead would get inlined into
-    every one of the k minhash lambdas by CollapseProject and evaluated
-    ~2k times per row interpreted (measured: 31s for 253 rows vs 80ms)."""
+    The band keys come from ``operators/dedup.minhash_band_buckets``
+    over the char-3-shingles of each norm. The shingles are computed
+    inline: the band explode is their only consumer, so there is
+    nothing to materialize them for."""
     tok = forms.select(
         "norm",
         F.explode(F.split(F.col("norm"), " ")).alias("t"),
@@ -77,12 +77,10 @@ def blocking_keys(forms: DataFrame, bands: int = DEFAULT_BANDS, rows: int = DEFA
         F.concat(F.lit("sfx:"), F.substring(F.reverse(F.col("norm")), 1, 3)).alias("block_key"),
     )
 
-    sig = forms.select(
-        "norm",
-        band_keys(minhash_signature(F.col("sh"), k=bands * rows), bands, rows).alias("bk"),
-    )
-    band = sig.select("norm", F.explode("bk").alias("bkey")).select(
-        "norm", F.concat(F.lit("band:"), F.col("bkey").cast("string")).alias("block_key")
+    sh = forms.select(F.col("norm").alias("id"), char_shingles(F.col("norm")).alias("sh"))
+    band = minhash_band_buckets(sh, bands, rows).select(
+        F.col("id").alias("norm"),
+        F.concat(F.lit("band:"), F.col("bucket").cast("string")).alias("block_key"),
     )
     return tok.unionByName(pfx).unionByName(sfx).unionByName(band)
 
@@ -92,7 +90,7 @@ def candidate_pairs(
     bands: int = DEFAULT_BANDS,
     rows: int = DEFAULT_ROWS,
     max_block: int = DEFAULT_MAX_BLOCK,
-    pre_shingled: bool = False,
+    new_norms: DataFrame | None = None,
 ) -> DataFrame:
     """Distinct unordered candidate pairs (norm_a < norm_b) via blocking.
 
@@ -100,59 +98,10 @@ def candidate_pairs(
     big is a stopword-like key whose pairs would be quadratic noise; the
     union of the two schemes keeps recall (tests/test_linking.py).
 
-    ``pre_shingled``: the caller PROMISES ``forms`` already carries a
-    materialized+checkpointed ``sh`` char-shingle column (what
-    ``link_candidates`` builds). This is an explicit contract flag, not
-    an inference from column presence (ADVICE r5): a caller that adds
-    ``sh`` inline WITHOUT localCheckpoint would re-enable the
-    documented Catalyst self-join analysis hang (explain() alone takes
-    minutes over a live shingle expression tree) with no guard."""
-    # lineage cut before the self-join: both sides would otherwise carry
-    # the nested minhash lambda tree, which Catalyst's self-join
-    # analysis handles super-linearly (see operators/dedup.py).
-    # Lineage cut on the DISTINCT FORMS as well as the keys: without it,
-    # InferFiltersFromGenerate derives `size(band_keys(minhash(...)))>0`
-    # from the explode and predicate pushdown moves it BELOW the distinct
-    # aggregate — re-evaluating the whole minhash expression on every raw
-    # mention row (measured: 320s instead of 2s at 430k mentions; the
-    # rule is also excluded session-wide in session.py). Forms are
-    # dim-sized, so the checkpoint is cheap. The shingle array is
-    # materialized INTO the checkpoint so the minhash lambdas reference a
-    # stored column, not an inlinable expression (see blocking_keys).
-    # A pre_shingled caller's frame passes through untouched —
-    # re-checkpointing a checkpoint would just copy vocabulary blocks.
-    if pre_shingled:
-        if "sh" not in forms.columns:
-            raise ValueError(
-                "candidate_pairs(pre_shingled=True) requires a materialized "
-                "'sh' shingle column (see link_candidates)"
-            )
-    else:
-        forms = forms.withColumn("sh", char_shingles(F.col("norm"))).localCheckpoint(eager=True)
-    keys = blocking_keys(forms, bands, rows).localCheckpoint(eager=True)
-    w = Window.partitionBy("block_key")
-    keys = keys.withColumn("__bs", F.count("*").over(w)).filter(F.col("__bs") <= max_block).drop("__bs")
-    a = keys.alias("a")
-    b = keys.alias("b")
-    return (
-        a.join(b, on="block_key")
-        .filter(F.col("a.norm") < F.col("b.norm"))
-        .select(F.col("a.norm").alias("norm_a"), F.col("b.norm").alias("norm_b"))
-        .dropDuplicates(["norm_a", "norm_b"])
-    )
-
-
-def delta_candidate_pairs(
-    forms: DataFrame,
-    new_norms: DataFrame,
-    bands: int = DEFAULT_BANDS,
-    rows: int = DEFAULT_ROWS,
-    max_block: int = DEFAULT_MAX_BLOCK,
-) -> DataFrame:
-    """Candidate pairs INVOLVING at least one new form (incremental
-    finalize). Block keys and the block-size cap are computed over ALL
-    forms — identical block membership and cap behavior to the full
-    build — but the quadratic pair expansion is restricted to pairs
+    ``new_norms`` (incremental finalize) keeps only pairs with at least
+    one side in it. Block keys and the block-size cap are still computed
+    over ALL forms — identical block membership and cap behavior to the
+    full build — but the quadratic pair expansion is restricted to pairs
     with a new side: old x old pairs were either already edges (baked
     into the prior components) or already scored below threshold, and
     a form's block keys never change, so no old x old pair can appear
@@ -163,23 +112,24 @@ def delta_candidate_pairs(
     NOW, but its old x old edges from when it was smaller are already
     merged into the prior components and are not unwound — incremental
     components can only merge, never split."""
-    forms = forms.withColumn("sh", char_shingles(F.col("norm"))).localCheckpoint(eager=True)
+    # lineage cut before the self-join: the window and both join sides
+    # read the stored keys instead of re-running the blocking unions
     keys = blocking_keys(forms, bands, rows).localCheckpoint(eager=True)
     w = Window.partitionBy("block_key")
     keys = keys.withColumn("__bs", F.count("*").over(w)).filter(F.col("__bs") <= max_block).drop("__bs")
-    keys = keys.join(
-        F.broadcast(new_norms.select("norm").withColumn("__new", F.lit(True))),
-        on="norm",
-        how="left",
-    ).withColumn("__new", F.coalesce(F.col("__new"), F.lit(False)))
+    pair = F.col("a.norm") < F.col("b.norm")
+    if new_norms is not None:
+        keys = keys.join(
+            F.broadcast(new_norms.select("norm").withColumn("__new", F.lit(True))),
+            on="norm",
+            how="left",
+        ).withColumn("__new", F.coalesce(F.col("__new"), F.lit(False)))
+        pair = pair & (F.col("a.__new") | F.col("b.__new"))
     a = keys.alias("a")
     b = keys.alias("b")
     return (
         a.join(b, on="block_key")
-        .filter(
-            (F.col("a.norm") < F.col("b.norm"))
-            & (F.col("a.__new") | F.col("b.__new"))
-        )
+        .filter(pair)
         .select(F.col("a.norm").alias("norm_a"), F.col("b.norm").alias("norm_b"))
         .dropDuplicates(["norm_a", "norm_b"])
     )
@@ -302,17 +252,13 @@ def link_candidates(
     forms = (
         surf.groupBy("norm")
         .agg(F.sum("n").cast("long").alias("n_mentions"))
-        .withColumn("sh", char_shingles(F.col("norm")))
         .localCheckpoint(eager=True)
     )
-    pairs = candidate_pairs(forms, bands, rows, max_block, pre_shingled=True)
+    pairs = candidate_pairs(forms, bands, rows, max_block)
     if context_weight:
         scored = context_boosted_scores(pairs, mentions, context_weight)
         edges = scored.filter(F.col("score") >= F.lit(threshold))
     else:
         edges = score_pairs(pairs, threshold)
-    # drop the shingle working column: downstream consumers (CC
-    # vertices, incremental state) expect (norm, n_mentions), and the
-    # projection still reads the checkpointed blocks — no rescan
-    return forms.drop("sh"), edges, surf
+    return forms, edges, surf
 

@@ -11,13 +11,12 @@ The graph-global stages (candidate scoring, CC superstep, node/edge
 materialization) are explained over schema-only placeholder frames:
  * their real inputs only exist after upstream ACTIONS run (dry-run
    must not run any), and
- * the candidate self-join is deliberately shown over a placeholder
-   keys frame — analyzing a self-join over the live minhash generator
-   tree without the production lineage cut is the measured
-   Catalyst-analysis hang (operators/linking.py), which the real
-   pipeline avoids with localCheckpoint (an action, so unavailable
-   here). The plan SHAPE (join strategy, dedup, scoring expressions)
-   is what dry-run documents; blocking-key expressions get their own
+ * the candidate self-join reads a checkpointed keys frame in
+   production (operators/linking.candidate_pairs), and localCheckpoint
+   is an action, so dry-run shows the join over a placeholder keys
+   frame instead. The plan SHAPE (join strategy, dedup, scoring
+   expressions) is what dry-run documents; the blocking keys (token,
+   prefix/suffix and codegen minhash band branches) get their own
    entry.
 """
 
@@ -26,7 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions.text import adaptive_containment, char_shingles
+from ..functions.text import adaptive_containment
 from ..operators.extraction import mentions_from_staged, triples_from_staged
 from ..operators.graph import build_edges, link_mentions
 from ..operators.linking import blocking_keys
@@ -65,7 +64,6 @@ def explain_pipeline(
         surface_stats(mentions_ph)
         .groupBy("norm")
         .agg(F.sum("n").cast("long").alias("n_mentions"))
-        .withColumn("sh", char_shingles(F.col("norm")))
     )
     plans["blocking_keys"] = _fmt(blocking_keys(forms, cfg.bands, cfg.rows))
 

@@ -281,14 +281,12 @@ def materialize_graph(
     # canonical representative (rank 1 — assignment is exact by norm).
     from ..functions.text import adaptive_containment
 
-    t0 = time.time()
     links = linked.select(
         "mention_id",
         F.col("entity_id").alias("entity_key"),
         F.round(adaptive_containment(F.col("norm"), F.col("entity_id")), 6).alias("score"),
         F.lit(1).alias("rank"),
     )
-    timings["links_def"] = round(time.time() - t0, 3)
 
     # nodes and edges are INDEPENDENT tables into a fresh out_dir (no
     # publish-ordering constraint — that exists only in the delta
@@ -312,9 +310,7 @@ def materialize_graph(
     for c in caches:
         c.unpersist(blocking=False)
 
-    t0 = time.time()
     nodes_out, edges_out = read_published(spark, out_dir)
-    timings["readback_defs"] = round(time.time() - t0, 3)
     return {
         "mentions": mentions,
         "triples": triples,

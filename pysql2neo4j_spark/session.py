@@ -62,10 +62,10 @@ def get_spark(
         # gated fallback in operators/dedup._spread covers that.)
         .config("spark.sql.files.maxPartitionBytes", "32m")
         # InferFiltersFromGenerate duplicates the generator input as a
-        # size()>0 filter; for our heavy nested-lambda signature arrays
-        # (minhash bands, simhash chunks) that doubles — and after
-        # pushdown through aggregates, multiplies — the most expensive
-        # expression in the plan. Our generators never produce empty
+        # size()>0 filter; for the simhash chunk arrays (built from 64
+        # lambda aggregates per row) that doubles — and after pushdown
+        # through aggregates, multiplies — the most expensive
+        # expression in the plan. Those generators never produce empty
         # arrays, so the inferred filter only costs.
         .config(
             "spark.sql.optimizer.excludedRules",

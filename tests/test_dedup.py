@@ -4,6 +4,7 @@ near-dup pairs; embedding dedup finds planted vector dups."""
 from __future__ import annotations
 
 import pytest
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from pysql2neo4j_spark.operators.dedup import (
@@ -500,34 +501,114 @@ def test_pii_redact_registry_true_positives(spark):
     out.unpersist()
 
 
-def test_minhash_codegen_buckets_match_declarative(docs):
-    """r7 optimization gate: minhash_lsh_pairs computes its band
-    buckets in the explode + codegen-hash + min-aggregate shape (the
-    declarative band_keys(minhash_signature(...)) nests lambdas that
-    Catalyst evaluates interpreted — measured 33 s of the 35 s sf0.1
-    key). The two shapes must stay hash-identical bucket-for-bucket,
-    or the candidate set (and with it the oracle-checked pair set's
-    recall guarantee) silently drifts."""
-    from pysql2neo4j_spark.functions.hashing import band_keys, minhash_signature
-    from pysql2neo4j_spark.operators.dedup import _with_shingles, minhash_band_buckets
+# ---------------------------------------------- declarative minhash spec
+# The declarative (nested-lambda) minhash, kept here as the reference
+# spec that operators/dedup.minhash_band_buckets must reproduce
+# bucket-for-bucket. Production no longer uses it: Catalyst evaluates
+# its lambdas interpreted.
 
-    bands, rows = 12, 2
-    k = bands * rows
-    sh = _with_shingles(docs, "doc_id", "text", 3).localCheckpoint(eager=True).filter(
-        F.size("sh") > 0
+MINHASH_K_DEFAULT = 48  # 12 bands x 4 rows
+
+
+def minhash_signature(shingles: Column, k: int = MINHASH_K_DEFAULT) -> Column:
+    """array<bigint> of k minhash values over an array<string> column.
+
+    The hash family is ``xxhash64(shingle, i)`` for i in [0, k) — one
+    64-bit hash per (shingle, index) pair. Built as a single nested
+    ``transform`` over ``sequence(0, k-1)`` so the plan carries ONE
+    expression tree; the naive ``F.array(*[... for i in range(k)])``
+    duplicates the whole shingle scan k times in the physical plan and
+    blows up codegen (measured: minutes vs. seconds on tiny inputs).
+    Empty shingle sets hash the empty string so the signature is total."""
+    safe = F.when(F.size(shingles) > 0, shingles).otherwise(F.array(F.lit("")))
+    return F.transform(
+        F.sequence(F.lit(0), F.lit(k - 1)),
+        lambda i: F.array_min(F.transform(safe, lambda s: F.xxhash64(s, i))),
     )
-    declarative = sorted(
+
+
+def band_keys(signature: Column, bands: int, rows: int) -> Column:
+    """array<bigint> of LSH band keys: hash of each band's row slice,
+    band index mixed in so buckets from different bands never collide.
+    Single nested transform for the same codegen reason as above."""
+    return F.transform(
+        F.sequence(F.lit(0), F.lit(bands - 1)),
+        lambda b: F.xxhash64(
+            b,
+            F.concat_ws(
+                ",",
+                F.transform(F.slice(signature, b * rows + 1, rows), lambda x: x.cast("string")),
+            ),
+        ),
+    )
+
+
+def _declarative_buckets(sh, bands: int, rows: int) -> list:
+    return sorted(
         (r.id, r.bucket)
         for r in sh.select(
-            "id", band_keys(minhash_signature(F.col("sh"), k=k), bands, rows).alias("bk")
+            "id", band_keys(minhash_signature(F.col("sh"), k=bands * rows), bands, rows).alias("bk")
         ).select("id", F.explode("bk").alias("bucket")).collect()
+    )
+
+
+def test_minhash_codegen_buckets_match_declarative(spark, docs):
+    """r7 optimization gate: minhash_band_buckets (explode +
+    codegen-hash + min-aggregate) is the package's one minhash
+    construction, used by dedup's minhash_lsh_pairs and by linking's
+    blocking_keys. It must stay hash-identical to the declarative spec
+    above bucket-for-bucket, or the candidate sets (and with them the
+    oracle-checked pair set's recall guarantee and the linking blocks)
+    silently drift. Two inputs: the fixture docs' word-3-shingles, and
+    the char-3-shingles of every gazetteer alias norm plus the empty
+    and a one-character norm — char_shingles yields [""] / ["a"] for
+    those, the inputs where the spec's empty-set branch and the
+    explode could disagree."""
+    from pysql2neo4j_spark.corpus import build_gazetteer, normalize_surface
+    from pysql2neo4j_spark.functions.text import char_shingles
+    from pysql2neo4j_spark.operators.dedup import _with_shingles, minhash_band_buckets
+    from pysql2neo4j_spark.operators.linking import (
+        DEFAULT_BANDS,
+        DEFAULT_ROWS,
+        blocking_keys,
+    )
+
+    bands, rows = 12, 2
+    sh = _with_shingles(docs, "doc_id", "text", 3).localCheckpoint(eager=True).filter(
+        F.size("sh") > 0
     )
     # THE production construction (no hand-synced copy): drift in
     # minhash_band_buckets fails here against the declarative spec
     codegen = sorted(
         (r.id, r.bucket) for r in minhash_band_buckets(sh, bands, rows).collect()
     )
-    assert codegen == declarative and len(codegen) == bands * sh.count()
+    assert codegen == _declarative_buckets(sh, bands, rows)
+    assert len(codegen) == bands * sh.count()
+
+    norms = sorted(
+        {normalize_surface(a) for e in build_gazetteer() for a in e.aliases} | {"", "a"}
+    )
+    forms = spark.createDataFrame([(n,) for n in norms], "norm string")
+    csh = forms.select(
+        F.col("norm").alias("id"), char_shingles(F.col("norm")).alias("sh")
+    ).localCheckpoint(eager=True)
+    assert {tuple(r.sh) for r in csh.filter(F.col("id").isin("", "a")).collect()} == {
+        ("",), ("a",)
+    }
+    spec = _declarative_buckets(csh, DEFAULT_BANDS, DEFAULT_ROWS)
+    assert len(spec) == DEFAULT_BANDS * len(norms)
+    assert sorted(
+        (r.id, r.bucket)
+        for r in minhash_band_buckets(csh, DEFAULT_BANDS, DEFAULT_ROWS).collect()
+    ) == spec
+    # linking's band blocks are the same buckets, re-prefixed
+    band_blocks = sorted(
+        (r.norm, r.block_key)
+        for r in blocking_keys(forms)
+        .filter(F.col("block_key").startswith("band:"))
+        .collect()
+    )
+    assert band_blocks == sorted((n, f"band:{b}") for n, b in spec)
 
 
 def test_oracle_scale_buckets_under_caps(spark):

@@ -23,5 +23,10 @@ def test_explain_pipeline_all_stages_no_writes(spark, transcripts_df, tmp_out):
     assert "BroadcastHashJoin" in plans["links_attach"]  # salted mention->entity
     assert "BroadcastHashJoin" in plans["nodes"]
     assert "Aggregate" in plans["cc_superstep"]  # min-label groupBy
+    # minhash band keys in the codegen shape (operators/dedup
+    # .minhash_band_buckets), not the interpreted nested-lambda signature
+    assert "array_min" not in plans["blocking_keys"]
+    assert "HashAggregate" in plans["blocking_keys"]
+    assert "min(xxhash64(" in plans["blocking_keys"]
     # dry-run touched no filesystem state
     assert os.listdir(tmp_out) == []

@@ -123,3 +123,23 @@ def test_context_boost_links_ambiguous_alias(spark):
     # decoy shares a string shape with the target but no context
     if probe2.collect()[0].s < DEFAULT_THRESHOLD:
         assert ("marla kwint", "marla qwint") not in got1
+
+
+def test_candidate_pairs_new_norms_restricts_to_new_side(spark):
+    """The incremental finalize's branch of candidate_pairs: with
+    ``new_norms`` it yields exactly the full candidate set's pairs that
+    have at least one new side (blocks and caps still over ALL forms),
+    and nothing when no norm is new."""
+    norms = sorted({normalize_surface(a) for e in build_gazetteer() for a in e.aliases})
+    forms = spark.createDataFrame([(n, 1) for n in norms], "norm string, n_mentions long")
+    new = set(norms[::7])
+    new_df = spark.createDataFrame([(n,) for n in sorted(new)], "norm string")
+
+    full = {(r.norm_a, r.norm_b) for r in candidate_pairs(forms).collect()}
+    got = {(r.norm_a, r.norm_b) for r in candidate_pairs(forms, new_norms=new_df).collect()}
+    expected = {p for p in full if p[0] in new or p[1] in new}
+    assert expected and len(expected) < len(full)
+    assert got == expected
+
+    none = spark.createDataFrame([], "norm string")
+    assert candidate_pairs(forms, new_norms=none).count() == 0
